@@ -13,17 +13,24 @@ import org.w3c.dom.Element
   * same symbol — SURVEY §2.5 J4 / §2.6 A5) explicitly via a row_number window
   * over the (member, line) position, since Spark gives no implicit ordering.
   *
-  * SCALE: dims are small relative to facts (CPC universe ≈ 260k symbols); the
-  * keep-last window shuffles only the dim, and downstream validation
-  * broadcasts these frames, so the fact table never shuffles.
+  * SCALE: dims are small relative to facts (CPC universe ≈ 260k symbols)
+  * and each ships as ONE zip archive, which `binaryFile` reads as one
+  * unsplittable file — one partition, one decode task. `keepLast` therefore
+  * `coalesce(1)`s in front of its window: the single partition already
+  * satisfies the window's clustering, so the keep-last adds no exchange and
+  * no second stage, and no parallelism is lost. Downstream validation
+  * broadcasts these frames, so the fact table never shuffles either; a dim
+  * is one job, its broadcast build.
   */
 object CpcDimSources {
 
-  /** Keep only the last row per normalized symbol in (member, line) order. */
+  /** Keep only the last row per normalized symbol in (member, line) order.
+    * `df` comes from one archive, so `coalesce(1)` keeps its single task and
+    * reports `SinglePartition`, which spares the window a hash exchange. */
   private def keepLast(df: DataFrame): DataFrame = {
     val w = Window.partitionBy("symbol")
       .orderBy(col("memberIdx").desc, col("lineNo").desc)
-    df.withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn", "memberIdx", "lineNo")
+    df.coalesce(1).withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn", "memberIdx", "lineNo")
   }
 
   /** Symbol-list CSV inside `CPCSymbolList{v}.zip` (reference:
