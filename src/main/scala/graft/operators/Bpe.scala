@@ -57,21 +57,15 @@ object Bpe {
     out.toArray
   }
 
-  /** Spark's string SortOrder on the driver: byte-wise UTF-8
-    * ([[org.apache.spark.unsafe.types.UTF8String]]) — code-point order,
-    * NOT String.compareTo's UTF-16 code-unit order. */
-  private def utf8Cmp(a: String, b: String): Int =
-    org.apache.spark.unsafe.types.UTF8String.fromString(a)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-
-  /** COUNT-GATED driver merge loop (the [[GraphOps]]/[[Dedup]] small-
-    * relation discipline): BPE training never iterates the corpus —
-    * every round runs on the vocab-sized (symbols, count) table — so at
-    * or under `maxDriverWords` distinct words the whole merge loop runs
-    * in memory on the collected table: exact long pair counts, the same
-    * (count desc, left, right) argmax with the tie-break in UTF8 byte
-    * order, the same [[mergeOnce]] application and `minPairCount` stop.
-    * A web-scale vocabulary stays on the distributed loop unchanged. */
+  /** COUNT-GATED driver merge loop ([[IterUtils.gatedCollect]]): BPE
+    * training never iterates the corpus — every round runs on the
+    * vocab-sized (symbols, count) table — so at or under
+    * `maxDriverWords` distinct words the whole merge loop runs in memory
+    * on the collected table: exact long pair counts, the same (count
+    * desc, left, right) argmax with the tie-break in UTF-8 byte order
+    * ([[IterUtils.utf8Compare]]), the same [[mergeOnce]] application
+    * and `minPairCount` stop. A web-scale vocabulary stays on the
+    * distributed loop unchanged. */
   private def trainDriver(rows: Array[WordRow], numMerges: Int,
       minPairCount: Long): Seq[Merge] = {
     val syms = rows.map(_.symbols)
@@ -95,8 +89,8 @@ object Bpe {
       var bestL: String = null; var bestR: String = null; var bestC = 0L
       pc.foreach { case ((l, rr), v) =>
         val better = bestL == null || v > bestC || (v == bestC && {
-          val cl = utf8Cmp(l, bestL)
-          cl < 0 || (cl == 0 && utf8Cmp(rr, bestR) < 0)
+          val cl = IterUtils.utf8Compare(l, bestL)
+          cl < 0 || (cl == 0 && IterUtils.utf8Compare(rr, bestR) < 0)
         })
         if (better) { bestL = l; bestR = rr; bestC = v }
       }
@@ -116,7 +110,8 @@ object Bpe {
   /** Learns `numMerges` merge rules from the corpus. Rounds that find no
     * pair with count >= `minPairCount` stop early. */
   def train(docs: DataFrame, numMerges: Int, minPairCount: Long = 2L,
-      textCol: String = "text", maxDriverWords: Long = 1L << 20): Seq[Merge] = {
+      textCol: String = "text",
+      maxDriverWords: Long = IterUtils.MaxDriverRows): Seq[Merge] = {
     val spark = docs.sparkSession
     import spark.implicits._
     var words: Dataset[WordRow] = docs
@@ -125,15 +120,12 @@ object Bpe {
       .groupBy("word").agg(count(lit(1)).as("count"))
       .as[(String, Long)]
       .map { case (w, c) => WordRow(toSymbols(w), c) }
-      .localCheckpoint(eager = false)
-    // COUNT GATE: the count is also the materializing action — at or
-    // under the gate the collect reads frozen blocks and the loop runs
-    // on the driver; above it the distributed loop below continues on
-    // the now-materialized checkpoint
-    if (words.count() <= maxDriverWords) {
-      val rows = words.collect()
-      IterUtils.unpersistCheckpoint(words)
-      return trainDriver(rows, numMerges, minPairCount)
+    // COUNT GATE: at or under it the loop runs on the driver; above it
+    // the distributed loop below continues on the gate's
+    // already-materialized checkpoint
+    IterUtils.gatedCollect(words, maxDriverWords) match {
+      case Right(rows) => return trainDriver(rows, numMerges, minPairCount)
+      case Left(ck) => words = ck
     }
     val merges = Seq.newBuilder[Merge]
     var r = 0

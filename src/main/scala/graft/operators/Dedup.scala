@@ -506,11 +506,10 @@ object Dedup {
     * convergence COUNT; labels are localCheckpoint'd per round so lineage
     * doesn't deepen. */
   def duplicateClusters(pairs: DataFrame, maxRounds: Int = 25,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
-    // COUNT-GATED driver fast path (the [[Incremental]] discipline,
-    // r21-vetted there): a near-dup pair graph is bounded by the
-    // DUPLICATE mass, orders of magnitude below the corpus, so at or
-    // under `maxDriverEdges` edges (16 MB of long pairs — driver-safe)
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
+    // COUNT-GATED driver fast path ([[IterUtils.gatedCollect]]): a
+    // near-dup pair graph is bounded by the DUPLICATE mass, orders of
+    // magnitude below the corpus, so at or under `maxDriverEdges` edges
     // one path-compressed union-find replaces the whole pointer-jumping
     // cascade: 2 jobs total where the distributed loop pays ~2 jobs per
     // round plus the per-round exchange work. Union-by-min provably
@@ -518,22 +517,17 @@ object Dedup {
     // the min member id — the fixpoint of min-label propagation).
     // Long-id inputs only (every corpus-scale caller): other id types
     // keep the distributed loop so their output schema is untouched.
-    // Above the gate — or if the driver can't hold the edges — the
-    // distributed loop below runs exactly as before.
+    // Above the gate the distributed loop below runs exactly as before,
+    // over the gate's already-materialized checkpoint.
     val spark = pairs.sparkSession
     val longIds = Seq("id_a", "id_b").forall(c =>
       pairs.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (longIds) {
-      // lazy checkpoint: the gate count is a full scan and doubles as
-      // the materializing action; the collect (or the distributed loop)
-      // then reads the frozen blocks
-      val lp = pairs.select(col("id_a"), col("id_b"))
-        .localCheckpoint(eager = false)
-      val nEdges = lp.count()
-      if (nEdges <= maxDriverEdges) {
+    if (!longIds) return duplicateClustersDistributed(pairs, maxRounds)
+    IterUtils.gatedCollect(pairs.select(col("id_a"), col("id_b")),
+        maxDriverEdges) match {
+      case Right(rows) =>
         import spark.implicits._
-        val es = lp.collect().map(r => (r.getLong(0), r.getLong(1)))
-        IterUtils.unpersistCheckpoint(lp)
+        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
         val parent = scala.collection.mutable.HashMap.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -548,15 +542,15 @@ object Dedup {
           val (ra, rb) = (find(a), find(b))
           if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
         }
-        val out = es.iterator.flatMap(e => Iterator(e._1, e._2))
+        es.iterator.flatMap(e => Iterator(e._1, e._2))
           .toArray.distinct.map(x => (x, find(x))).toSeq
-        return out.toDF("doc_id", "cluster")
-      }
-      // gate exceeded: fall through to the distributed loop over the
-      // already-materialized checkpoint
-      return duplicateClustersDistributed(lp, maxRounds)
+          .toDF("doc_id", "cluster")
+      case Left(ck) =>
+        // the loop's eager edge checkpoint and final labels never read
+        // `ck` again once built, so the gate's blocks go when it returns
+        try duplicateClustersDistributed(ck, maxRounds)
+        finally IterUtils.unpersistCheckpoint(ck)
     }
-    duplicateClustersDistributed(pairs, maxRounds)
   }
 
   /** The distributed min-label-propagation + pointer-jumping loop —

@@ -30,7 +30,8 @@ object GraphOps {
     * node-sized; nothing is collected to the driver except the single
     * node COUNT that seeds the uniform prior. */
   def pageRank(edges: DataFrame, iterations: Int,
-      damping: Double = 0.85, maxDriverEdges: Long = 1L << 20): DataFrame = {
+      damping: Double = 0.85,
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
     // COUNT-GATED driver fast path (see [[driverPageRankRun]]); above
     // the gate the distributed loop below runs unchanged
     driverPageRankRun(edges, iterations, damping, 0.0, maxDriverEdges) match {
@@ -261,13 +262,12 @@ object GraphOps {
     * shrinks. Edges are eagerly checkpointed per round with the
     * superseded round released ([[pageRank]] lifetime discipline); no
     * windows, no driver state beyond the loop counter. */
-  /** COUNT-GATED driver fast path shared by the k-core family (the
-    * [[Dedup.duplicateClusters]] discipline): the deduped undirected
-    * edge list is lazily checkpointed and counted — at or under
-    * `maxDriverEdges` (16 MB of long pairs, driver-safe) it is
-    * collected once and the synchronous peel runs in memory (pure
-    * integer set semantics, so the per-round survivor sets are
-    * IDENTICAL to the join-aggregate program's); above the gate, or
+  /** COUNT-GATED driver fast path shared by the k-core family
+    * ([[IterUtils.collectIfSmall]]): at or under `maxDriverEdges` the
+    * deduped undirected edge list is collected once and the synchronous
+    * peel runs in memory (pure integer set semantics, so the per-round
+    * survivor sets are IDENTICAL to the join-aggregate program's); above
+    * the gate, or
     * for non-long id types, `None` is returned and the caller runs the
     * distributed loop unchanged. Returns the per-round trajectory
     * (round, survivors, converged) under the same early-exit +
@@ -284,11 +284,10 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(eager = false)
-    val n = und.count()
-    if (n > maxDriverEdges) { IterUtils.unpersistCheckpoint(und); return None }
-    val es = und.collect().map(r => (r.getLong(0), r.getLong(1)))
-    IterUtils.unpersistCheckpoint(und)
+    val es = IterUtils.collectIfSmall(und, maxDriverEdges) match {
+      case None => return None
+      case Some(rs) => rs.map(r => (r.getLong(0), r.getLong(1)))
+    }
     val adj = scala.collection.mutable.HashMap
       .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
     es.foreach { case (a, b) =>
@@ -317,7 +316,7 @@ object GraphOps {
   }
 
   def kCore(edges: DataFrame, k: Int, rounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
     require(k >= 1 && rounds >= 1, s"kCore k=$k rounds=$rounds")
     driverPeel(edges, k, rounds, maxDriverEdges) match {
       case Some((_, coreDeg)) =>
@@ -428,7 +427,7 @@ object GraphOps {
   }
 
   def labelPropagation(edges: DataFrame, rounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
     // COUNT-GATED driver fast path (see [[driverLpRun]]): synchronous
     // LP is idempotent at the changed==0 fixpoint, so the early exit
     // yields labels IDENTICAL to the fixed-round unroll
@@ -596,7 +595,7 @@ object GraphOps {
     * n·reach work; run it on thresholded/sampled graphs, or shard the
     * source set across jobs at web scale. */
   def betweenness(edges: DataFrame, depth: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
     // COUNT-GATED driver fast path (see [[driverBetweenness]]); above
     // the gate (or the n·m work budget) the distributed program below
     // runs unchanged
@@ -767,7 +766,7 @@ object GraphOps {
       .groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
 
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
     driverPeel(edges, k, rounds, maxDriverEdges) match {
       case Some((_, coreDeg)) =>
         val spark = edges.sparkSession
@@ -837,7 +836,7 @@ object GraphOps {
     * `rounds` either wastes passes past the fixpoint or silently
     * under-peels — this reports which happened. */
   def kCoreTrajectory(edges: DataFrame, k: Int, maxRounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
     require(maxRounds >= 1, s"maxRounds=$maxRounds must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -893,7 +892,7 @@ object GraphOps {
     * node-keyed join for the changed count; driver state is one Long
     * per round. */
   def labelPropagationTrajectory(edges: DataFrame, maxRounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
     require(maxRounds >= 1, s"maxRounds=$maxRounds must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -963,7 +962,7 @@ object GraphOps {
     * round; eager checkpoint + deterministic release per round. */
   def pageRankTrajectory(edges: DataFrame, maxRounds: Int,
       damping: Double = 0.85, tol: Double = 1e-6,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+      maxDriverEdges: Long = IterUtils.MaxDriverRows): DataFrame = {
     require(maxRounds >= 1, s"maxRounds=$maxRounds must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1207,37 +1206,22 @@ object GraphOps {
 
   // -------------------------------------------------------------------
   // COUNT-GATED driver fast paths for the numeric-mass / vote loop
-  // family — the [[driverPeel]] / [[Dedup.duplicateClusters]] discipline
-  // extended to id-type-GENERIC graphs (the trade graphs key on nation
-  // NAMES): the loop-invariant edge relation is lazily checkpointed,
-  // counted (the gate and the materializing action in one job), and at
-  // or under the driver-safe bound collected once; the whole iteration
-  // then runs in memory, replicating the distributed program's
-  // arithmetic step for step. Above the gate — or for id types whose
-  // Spark sort order we do not replicate — the distributed loop runs
-  // unchanged, so nothing here is a local[32] tune: at corpus scale the
-  // gate simply never fires.
+  // family — the [[driverPeel]] discipline extended to id-type-GENERIC
+  // graphs (the trade graphs key on nation NAMES). The loop-invariant
+  // edge relation goes through the shared gate
+  // ([[IterUtils.collectIfSmall]]: lazy checkpoint, count, collect at
+  // or under the driver-safe bound, release); the whole iteration then
+  // runs in memory, replicating the distributed program's arithmetic
+  // step for step. Above the gate — or for id types whose Spark sort
+  // order we do not replicate — the distributed loop runs unchanged, so
+  // nothing here is a local[32] tune: at corpus scale the gate simply
+  // never fires.
   // -------------------------------------------------------------------
-
-  /** Lazily checkpoints `df`, counts it (gate + materializing action in
-    * one job — the collect then reads frozen blocks instead of
-    * re-running the plan), collects at or under `maxRows`, and releases
-    * the blocks either way. None = stay distributed. */
-  private def gatedCollect(df: DataFrame,
-      maxRows: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    val ck = df.localCheckpoint(eager = false)
-    val n = ck.count()
-    val out = if (n > maxRows) None else Some(ck.collect())
-    IterUtils.unpersistCheckpoint(ck)
-    out
-  }
 
   /** Driver-side total order matching Spark's SortOrder for the id
     * types the gates support: longs/ints natural, strings by
-    * [[org.apache.spark.unsafe.types.UTF8String]] (byte-wise UTF-8 =
-    * code-point order) — NOT String.compareTo, whose UTF-16 code-unit
-    * order diverges for supplementary characters. None = unsupported
-    * type, the caller stays distributed. */
+    * [[IterUtils.utf8Compare]]. None = unsupported type, the caller
+    * stays distributed. */
   private def idOrdering(
       dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
@@ -1246,20 +1230,11 @@ object GraphOps {
       case IntegerType => Some(Ordering.by((v: Any) => v.asInstanceOf[Int]))
       case StringType => Some(new Ordering[Any] {
         def compare(a: Any, b: Any): Int =
-          org.apache.spark.unsafe.types.UTF8String
-            .fromString(a.asInstanceOf[String])
-            .compareTo(org.apache.spark.unsafe.types.UTF8String
-              .fromString(b.asInstanceOf[String]))
+          IterUtils.utf8Compare(a.asInstanceOf[String], b.asInstanceOf[String])
       })
       case _ => None
     }
   }
-
-  /** Spark's Round(x, 0) on a double, exactly: decimal HALF_UP over the
-    * canonical Double.toString representation (Catalyst RoundBase's
-    * DoubleType branch; the [[QualityClassifier]] r6 precedent). */
-  private def sparkRound(x: Double): Double =
-    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** All-sources Brandes work budget for [[driverBetweenness]]:
     * n·m beyond this runs distributed even when the edge COUNT passes
@@ -1284,15 +1259,13 @@ object GraphOps {
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
     val nodeType = und.schema("a").dataType
-    val rows = gatedCollect(und, maxDriverEdges) match {
+    val rows = IterUtils.collectIfSmall(und, maxDriverEdges) match {
       case None => return None
       case Some(rs) => rs
     }
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(v: Any): Int =
-      idx.getOrElseUpdate(v, { ids += v; ids.size - 1 })
+    val intern = new IdInterner
     val ab = rows.map(r => (intern(r.get(0)), intern(r.get(1))))
+    val ids = intern.ids
     val n = ids.size
     if (n.toLong * ab.length > BetweennessWorkBudget) return None
     val adj = Array.fill(n)(new scala.collection.mutable.ArrayBuffer[Int])
@@ -1355,7 +1328,7 @@ object GraphOps {
             }
             j += 1
           }
-          dq(v) = sparkRound(acc * 1000000000.0).toLong
+          dq(v) = IterUtils.sparkRound(acc * 1000000000.0).toLong
           i2 += 1
         }
         bl -= 1
@@ -1373,7 +1346,7 @@ object GraphOps {
     val out = new java.util.ArrayList[org.apache.spark.sql.Row](n)
     var v = 0
     while (v < n) {
-      val bt = sparkRound(
+      val bt = IterUtils.sparkRound(
         (BigDecimal(sd(v)).toDouble / 1000000000.0) / 2.0 * 1000000.0) /
         1000000.0
       out.add(org.apache.spark.sql.Row(ids(v), bt))
@@ -1399,17 +1372,15 @@ object GraphOps {
           Seq[(Long, Double, Boolean)])] = {
     val e = edges.select(col("src"), col("dst"),
       col("w").cast("double").as("w"))
-    val rows = gatedCollect(e, maxDriverEdges) match {
+    val rows = IterUtils.collectIfSmall(e, maxDriverEdges) match {
       case None => return None
       case Some(rs) => rs
     }
     if (edges.schema("src").dataType != edges.schema("dst").dataType ||
         rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
       return None // Spark's null/coercion semantics: stay distributed
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(v: Any): Int =
-      idx.getOrElseUpdate(v, { ids += v; ids.size - 1 })
+    val intern = new IdInterner
+    val ids = intern.ids
     val srcI = new Array[Int](rows.length)
     val dstI = new Array[Int](rows.length)
     val w = new Array[Double](rows.length)
@@ -1472,17 +1443,15 @@ object GraphOps {
     }
     val e = edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w"))
-    val rows = gatedCollect(e, maxDriverEdges) match {
+    val rows = IterUtils.collectIfSmall(e, maxDriverEdges) match {
       case None => return None
       case Some(rs) => rs
     }
     if (edges.schema("src").dataType != edges.schema("dst").dataType ||
         rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
       return None // Spark's null/coercion semantics: stay distributed
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(v: Any): Int =
-      idx.getOrElseUpdate(v, { ids += v; ids.size - 1 })
+    val intern = new IdInterner
+    val ids = intern.ids
     // nodes: distinct src ∪ dst of the RAW edges (self-loop-only nodes
     // keep their label through the restore, as in lpGraph)
     val sym = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), Long]

@@ -125,13 +125,14 @@ object Incremental {
     *      (unseen node → itself);
     *   2. build the QUOTIENT graph over those labels (one edge per pair
     *      of distinct touched components) and resolve its components with
-    *      a driver union-find — the quotient EDGE set is bounded by the
-    *      batch's distinct label-pair count (≤ batch edges; a dense merge
-    *      pattern can carry quadratically more edges than the remap rows
-    *      it produces), so the collect is COUNT-GATED: above
-    *      `maxDriverQuotient` edges the quotient resolves through the
-    *      distributed [[Dedup.duplicateClusters]] instead, and only the
-    *      remap ever reaches the driver;
+    *      [[Dedup.duplicateClusters]] under the same count gate
+    *      (`maxDriverQuotient`, [[IterUtils.gatedCollect]]): at or under
+    *      it the quotient is collected and resolved by the driver
+    *      union-find, above it by the distributed CC — the quotient EDGE
+    *      set is bounded by the batch's distinct label-pair count
+    *      (≤ batch edges), but a dense merge pattern can carry
+    *      quadratically more edges than the remap rows it produces, so
+    *      above the gate only the remap ever reaches the driver;
     *   3. the resulting old→new label remap (changes only) is
     *      model-sized and broadcast: new nodes insert with their
     *      remapped label, and history rows of merged components relabel
@@ -177,7 +178,7 @@ object Incremental {
   def incrementalComponents(spark: org.apache.spark.sql.SparkSession,
       statePath: String, newPairs: DataFrame, buckets: Int = 16,
       maxRounds: Int = 25, maxGenerations: Int = 16,
-      maxDriverQuotient: Long = 1L << 20): Unit = {
+      maxDriverQuotient: Long = IterUtils.MaxDriverRows): Unit = {
     // existence == a published manifest version; a crashed first batch's
     // partial txn dir (no manifest) reads as "uninitialized", never as
     // truncated history
@@ -203,58 +204,30 @@ object Incremental {
         .select(col("id"), coalesce(col("cluster"), col("id")).as("lbl"),
           col("cluster").isNull.as("fresh"))
     }).localCheckpoint() // read by both quotient sides + the insert pass
-    // lazy checkpoint: the count gate below is a full scan, so it doubles
-    // as the materializing action; the collect (or the distributed
-    // fallback) then reads the frozen blocks instead of re-running the
-    // two label joins
     val quotient = edges
       .join(mapped.select(col("id").as("u"), col("lbl").as("la")), Seq("u"))
       .join(mapped.select(col("id").as("v"), col("lbl").as("lb")), Seq("v"))
       .select(least(col("la"), col("lb")).as("id_a"),
         greatest(col("la"), col("lb")).as("id_b"))
       .where(col("id_a") =!= col("id_b")).distinct()
-      .localCheckpoint(eager = false)
     // old->new label changes only — bounded by the batch's touched
     // components, hence broadcastable by construction. The quotient EDGE
     // set is NOT similarly bounded (m touched components can carry up to
     // m(m-1)/2 distinct label pairs against at most m-1 remap rows, and a
     // fresh-heavy first batch's quotient is the whole deduped batch edge
-    // set), so the driver union-find fast path — one path-compressed pass
-    // instead of a per-batch pointer-jumping cascade of ~12 tiny jobs
-    // (measured at sf0.1: ~0.4 s and ~14 jobs per maintenance batch) —
-    // is taken only when the gate says the edges are driver-sized; above
-    // the gate the quotient resolves through the distributed CC and only
-    // the remap (broadcast-bounded by contract) reaches the driver.
-    // Union-by-min keeps labels canonical either way: the root of a merge
-    // is the min of the merged roots, i.e. the min member id — exactly
-    // duplicateClusters' canonical-min labels.
-    val nQuotient = quotient.count()
-    val remap: DataFrame = if (nQuotient <= maxDriverQuotient) {
-      val qedges = quotient.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent(c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      qedges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val changed = qedges.iterator.flatMap(e => Iterator(e._1, e._2))
-        .toArray.distinct.flatMap { x =>
-          val r = find(x)
-          if (r != x) Some((x, r)) else None
-        }.toSeq
-      spark.createDataFrame(changed).toDF("old_lbl", "new_lbl")
-    } else
-      Dedup.duplicateClusters(quotient, maxRounds)
-        .where(col("doc_id") =!= col("cluster"))
-        .select(col("doc_id").as("old_lbl"), col("cluster").as("new_lbl"))
+    // set), so it resolves through duplicateClusters' count gate: the
+    // gate's lazy checkpoint + count materializes the two label joins
+    // once, and at or under `maxDriverQuotient` edges the driver
+    // union-find — one path-compressed pass instead of a per-batch
+    // pointer-jumping cascade of ~12 tiny jobs (measured at sf0.1:
+    // ~0.4 s and ~14 jobs per maintenance batch) — resolves it; above
+    // the gate the distributed CC does, and only the remap reaches the
+    // driver. Either way the labels are canonical-min: the quotient CC's
+    // min over merged labels is the min member id.
+    val remap = Dedup.duplicateClusters(quotient, maxRounds,
+        maxDriverEdges = maxDriverQuotient)
+      .where(col("doc_id") =!= col("cluster"))
+      .select(col("doc_id").as("old_lbl"), col("cluster").as("new_lbl"))
     val inserts = mapped.where(col("fresh"))
       .join(broadcast(remap), col("lbl") === col("old_lbl"), "left")
       .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("cluster"))
@@ -302,7 +275,6 @@ object Incremental {
     }
     IterUtils.unpersistCheckpoint(edges)
     IterUtils.unpersistCheckpoint(mapped)
-    IterUtils.unpersistCheckpoint(quotient)
     IterUtils.unpersistCheckpoint(updates)
   }
 

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.Dataset
 
 /** Helpers for iterative driver loops over eagerly localCheckpoint'd
-  * DataFrames (connected components, PageRank, BPE training).
+  * DataFrames (connected components, PageRank, BPE training), and the
+  * count gate that routes a small relation to a driver replica instead.
   *
   * Each round of such a loop checkpoints its new iterate; the previous
   * round's blocks are dead the moment the new one is materialized, but
@@ -28,6 +29,71 @@ private[graft] object IterUtils {
         l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  // -------------------------------------------------------------------
+  // The COUNT GATE shared by every iterative family with a driver
+  // replica (duplicateClusters, and through it incrementalComponents;
+  // the k-core peel, Brandes betweenness, PageRank and label
+  // propagation in GraphOps; BPE training; TextRank). At or under the
+  // gate the small relation is collected once and the loop runs in
+  // memory, replicating the distributed program's arithmetic; above it
+  // the distributed loop runs, so at corpus scale the gate simply never
+  // fires. The helpers below are the Spark semantics those replicas
+  // copy by hand: string sort order, Round(x, 0), dense id interning.
+  // -------------------------------------------------------------------
+
+  /** Default row cap of every count gate: 2^20 rows, i.e. 16 MB of long
+    * pairs — driver-safe at any corpus scale. */
+  val MaxDriverRows: Long = 1L << 20
+
+  /** Lazily checkpoints `ds` and counts it — the gate and the
+    * materializing action in one job. At or under `maxRows` the rows
+    * are collected from the frozen blocks (the plan never re-runs) and
+    * the checkpoint is released: `Right(rows)`. Above it the
+    * materialized checkpoint is handed back, `Left(ck)`; the caller
+    * owns it and either continues its distributed loop on it or
+    * releases it ([[collectIfSmall]]). */
+  def gatedCollect[T](ds: Dataset[T],
+      maxRows: Long): Either[Dataset[T], Array[T]] = {
+    val ck = ds.localCheckpoint(eager = false)
+    if (ck.count() > maxRows) Left(ck)
+    else {
+      val rows = ck.collect()
+      unpersistCheckpoint(ck)
+      Right(rows)
+    }
+  }
+
+  /** [[gatedCollect]] for callers whose distributed loop restarts from
+    * the raw plan: above the gate the checkpoint is released and the
+    * result is `None`. */
+  def collectIfSmall[T](ds: Dataset[T], maxRows: Long): Option[Array[T]] =
+    gatedCollect(ds, maxRows) match {
+      case Right(rows) => Some(rows)
+      case Left(ck) => unpersistCheckpoint(ck); None
+    }
+
+  /** Spark's string SortOrder on the driver: byte-wise UTF-8 (code-point
+    * order) — NOT String.compareTo's UTF-16 code-unit order, which
+    * diverges for supplementary characters. */
+  def utf8Compare(a: String, b: String): Int = {
+    import org.apache.spark.unsafe.types.UTF8String
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+  }
+
+  /** Spark's Round(x, 0) on a double, exactly: decimal HALF_UP over the
+    * canonical Double.toString representation (Catalyst RoundBase's
+    * DoubleType branch). */
+  def sparkRound(x: Double): Double =
+    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble
+}
+
+/** Dense ids for a driver replica: `apply` maps each distinct value to
+  * 0, 1, 2, ... in first-seen order; `ids(i)` maps back. */
+private[operators] final class IdInterner {
+  private val idx = scala.collection.mutable.HashMap.empty[Any, Int]
+  val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+  def apply(v: Any): Int = idx.getOrElseUpdate(v, { ids += v; ids.size - 1 })
 }
 
 /** Periodic checkpoint discipline for CHAIN-shaped fixed-round loops —

@@ -32,7 +32,7 @@ object TextRank {
     * the superseded round released ([[GraphOps.pageRank]] discipline).
     * The final cut is a per-doc WindowGroupLimit top-K. */
   def keywords(docs: DataFrame, rounds: Int, topK: Int,
-      maxDriverPairs: Long = 1L << 20): DataFrame = {
+      maxDriverPairs: Long = IterUtils.MaxDriverRows): DataFrame = {
     val toks = docs.select(col("doc_id"), split(col("text"), " ").as("t"))
     val pairs = toks.select(col("doc_id"),
       explode(expr(
@@ -42,12 +42,11 @@ object TextRank {
         least(col("p.a"), col("p.b")).as("wa"),
         greatest(col("p.a"), col("p.b")).as("wb"))
       .where(col("wa") =!= col("wb")).distinct()
-    // COUNT-GATED driver fast path (the [[GraphOps]] small-relation
-    // discipline): ranks live in integer millionths — floor division,
-    // exact integer sums, one correctly-rounded double op per node per
-    // round — so the driver loop is BIT-IDENTICAL to the distributed
-    // one, not merely within margin. Above the gate (pair relation
-    // larger than driver-safe) the distributed loop runs unchanged.
+    // COUNT-GATED driver fast path ([[IterUtils.collectIfSmall]]): ranks
+    // live in integer millionths — floor division, exact integer sums,
+    // one correctly-rounded double op per node per round — so the driver
+    // loop is BIT-IDENTICAL to the distributed one, not merely within
+    // margin. Above the gate the distributed loop runs unchanged.
     driverKeywords(pairs, rounds, topK, maxDriverPairs) match {
       case Some(df) => return df
       case None => ()
@@ -92,14 +91,12 @@ object TextRank {
     * arithmetic per round, same (r desc, w UTF8-asc) top-K cut. */
   private def driverKeywords(pairs: DataFrame, rounds: Int, topK: Int,
       maxDriverPairs: Long): Option[DataFrame] = {
-    val ck = pairs.localCheckpoint(eager = false)
-    val n = ck.count()
-    val rows = if (n > maxDriverPairs) null else ck.collect()
-    IterUtils.unpersistCheckpoint(ck)
-    if (rows == null) return None
+    val rows = IterUtils.collectIfSmall(pairs, maxDriverPairs) match {
+      case None => return None
+      case Some(rs) => rs
+    }
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
       return None // Spark's null-key join semantics: stay distributed
-    val u8 = org.apache.spark.unsafe.types.UTF8String.fromString _
     // per-(doc, word) interning
     val idx = scala.collection.mutable.HashMap.empty[(Any, String), Int]
     val docOf = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -136,9 +133,8 @@ object TextRank {
       var v = 0
       while (v < nn) {
         // every node has >= 1 incident edge, so c(v) is never null
-        next(v) = BigDecimal(150000.0 +
-          0.85 * BigDecimal(c(v)).toDouble)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        next(v) = IterUtils.sparkRound(150000.0 +
+          0.85 * BigDecimal(c(v)).toDouble).toLong
         v += 1
       }
       rank = next
@@ -164,7 +160,7 @@ object TextRank {
     byDoc.foreach { case (d, vs) =>
       val sorted = vs.sortWith { (x, y) =>
         if (rank(x) != rank(y)) rank(x) > rank(y)
-        else u8(wordOf(x)).compareTo(u8(wordOf(y))) < 0
+        else IterUtils.utf8Compare(wordOf(x), wordOf(y)) < 0
       }
       var p = 0
       while (p < sorted.length && p < topK) {

@@ -336,6 +336,22 @@ class Round16OpsSpec extends GraftSpec {
       "distributed fallback must produce identical canonical-min labels")
   }
 
+  test("incrementalComponents: a gate of 0 runs the distributed CC loop (round budget enforced)") {
+    import graft.operators.Incremental
+    // 10-node chain: the first batch's quotient IS the chain, and the
+    // distributed loop cannot converge on it within 2 propagation rounds
+    // — only the driver union-find (no round budget) could succeed
+    val chainBatch = (1L to 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val root = java.nio.file.Files.createTempDirectory("graft-cc-gate0")
+      .resolve("state").toString
+    intercept[IllegalStateException] {
+      Incremental.incrementalComponents(spark, root, chainBatch,
+        maxRounds = 2, maxDriverQuotient = 0L)
+    }
+    assert(graft.sources.ManifestCommit.currentSnapshot(spark, root).isEmpty,
+      "a failed first batch must leave the sidecar uninitialized")
+  }
+
   test("SortedNeighborhood.pairs: w larger than any partition still walks the continuation forward") {
     import graft.operators.SortedNeighborhood
     // 8 rows over 6 partitions: most partitions hold 1-2 rows, so a w=5

@@ -459,6 +459,37 @@ class ScaleSafetySpec extends GraftSpec {
     }
   }
 
+  test("count gate: collects at the cap, hands back the checkpoint above it, leaks no blocks") {
+    import graft.operators.IterUtils
+    val n = 37L
+    val ds = spark.range(n).toDF("id")
+    val sc = spark.sparkContext
+    // persisted RDD ids the gate leaves behind (the ContextCleaner may
+    // drop older ones meanwhile, so compare ids, not sizes)
+    def added(before: Set[Int]): Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    // at the cap: every row collected, the checkpoint released
+    val before = sc.getPersistentRDDs.keySet.toSet
+    IterUtils.gatedCollect(ds, maxRows = n) match {
+      case Right(rows) => assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until n))
+      case Left(_) => fail("a relation of exactly maxRows rows must be collected")
+    }
+    assert(added(before).isEmpty, "collect side must release its checkpoint")
+    // one row over: the materialized checkpoint comes back, still live
+    val before2 = sc.getPersistentRDDs.keySet.toSet
+    IterUtils.gatedCollect(ds, maxRows = n - 1) match {
+      case Right(_) => fail("a relation over maxRows must not be collected")
+      case Left(ck) =>
+        assert(added(before2).size == 1, "the checkpoint is handed back live")
+        assert(ck.count() == n)
+        IterUtils.unpersistCheckpoint(ck)
+        assert(added(before2).isEmpty)
+    }
+    // collectIfSmall releases the above-gate checkpoint itself
+    val before3 = sc.getPersistentRDDs.keySet.toSet
+    assert(IterUtils.collectIfSmall(ds, maxRows = n - 1).isEmpty)
+    assert(added(before3).isEmpty, "collectIfSmall must release above the gate")
+  }
+
   test("SRP near-dup pairs == exact all-pairs on a planted-dup corpus") {
     // twins of the first 20 vectors (cos == 1.0) on top of the real corpus
     val twins = emb.limit(20).select((col("vec_id") + 100000).as("vec_id"),
