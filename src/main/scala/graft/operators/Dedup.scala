@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for LLM training-data pipelines: exact,
@@ -510,11 +510,12 @@ object Dedup {
     // COUNT-GATED driver fast path ([[IterUtils.gatedCollect]]): a
     // near-dup pair graph is bounded by the DUPLICATE mass, orders of
     // magnitude below the corpus, so at or under `maxDriverEdges` edges
-    // one path-compressed union-find replaces the whole pointer-jumping
-    // cascade: 2 jobs total where the distributed loop pays ~2 jobs per
-    // round plus the per-round exchange work. Union-by-min provably
-    // yields the same canonical-min labels (the root of every merge is
-    // the min member id — the fixpoint of min-label propagation).
+    // one path-compressed union-find ([[IterUtils.unionByMin]]) replaces
+    // the whole pointer-jumping cascade: 2 jobs total where the
+    // distributed loop pays ~2 jobs per round plus the per-round exchange
+    // work. Union-by-min provably yields the same canonical-min labels
+    // (the root of every merge is the min member id — the fixpoint of
+    // min-label propagation).
     // Long-id inputs only (every corpus-scale caller): other id types
     // keep the distributed loop so their output schema is untouched.
     // Above the gate the distributed loop below runs exactly as before,
@@ -526,25 +527,10 @@ object Dedup {
     IterUtils.gatedCollect(pairs.select(col("id_a"), col("id_b")),
         maxDriverEdges) match {
       case Right(rows) =>
-        import spark.implicits._
-        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent(c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        es.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        es.iterator.flatMap(e => Iterator(e._1, e._2))
-          .toArray.distinct.map(x => (x, find(x))).toSeq
-          .toDF("doc_id", "cluster")
+        val labels = IterUtils.unionByMin(rows.map(r => (r.getLong(0), r.getLong(1))))
+        spark.createDataFrame(
+          java.util.Arrays.asList(labels.map { case (x, c) => Row(x, c) }: _*),
+          IterUtils.longSchema("doc_id", "cluster"))
       case Left(ck) =>
         // the loop's eager edge checkpoint and final labels never read
         // `ck` again once built, so the gate's blocks go when it returns

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Incremental-maintenance primitives: mergeable aggregate states and
@@ -121,22 +121,32 @@ object Incremental {
     * of all batches would produce — the register row's oracle.
     *
     * Per batch:
-    *   1. map the batch edges' endpoints through the existing labels
-    *      (unseen node → itself);
-    *   2. build the QUOTIENT graph over those labels (one edge per pair
-    *      of distinct touched components) and resolve its components with
-    *      [[Dedup.duplicateClusters]] under the same count gate
-    *      (`maxDriverQuotient`, [[IterUtils.gatedCollect]]): at or under
-    *      it the quotient is collected and resolved by the driver
-    *      union-find, above it by the distributed CC — the quotient EDGE
-    *      set is bounded by the batch's distinct label-pair count
-    *      (≤ batch edges), but a dense merge pattern can carry
-    *      quadratically more edges than the remap rows it produces, so
-    *      above the gate only the remap ever reaches the driver;
-    *   3. the resulting old→new label remap (changes only) is
-    *      model-sized and broadcast: new nodes insert with their
-    *      remapped label, and history rows of merged components relabel
-    *      via one broadcast join;
+    *   1. the batch's edge relation (long ids, self-pairs dropped) goes
+    *      through the count gate ([[IterUtils.gatedCollect]]) at
+    *      `maxDriverQuotient` edges. The batch's edge count bounds its
+    *      quotient graph's (one quotient edge per distinct pair of
+    *      touched components), so this gate is never looser than one on
+    *      the quotient. `maxDriverQuotient = 0` forces the distributed
+    *      path for every non-empty batch;
+    *   2. at or under the gate the batch resolves ON THE DRIVER: one
+    *      bounded lookup fetches the touched ids' current labels (the
+    *      label table joined against a broadcast of the touched-id set,
+    *      then collected — `id` is the table's key, so at most
+    *      |touched| ≤ 2 × gate rows come back); the label map (unseen id
+    *      → itself), the quotient graph over those labels and its
+    *      union-by-min ([[IterUtils.unionByMin]]) run in memory, and so
+    *      do the old→new label REMAP (changed labels only) and the
+    *      INSERTS (fresh ids with their final label). Above the gate the
+    *      same steps run distributed: the endpoints map through the
+    *      labels in one join (materialized once, read by both quotient
+    *      sides and the insert pass), and the quotient resolves with
+    *      [[Dedup.duplicateClusters]] under the same gate — a dense merge
+    *      pattern can carry quadratically more quotient edges than the
+    *      remap rows it produces, so there only the remap reaches the
+    *      driver;
+    *   3. the remap is model-sized and broadcast: history rows of merged
+    *      components relabel via one broadcast join, which runs inside
+    *      the write;
     *   4. the delta lands through the partition-pruned keyed upsert
     *      committed via the MANIFEST ([[graft.sources.ManifestCommit
     *      .upsertManifested]]) into an id-bucketed table, so the WRITE
@@ -147,7 +157,9 @@ object Incremental {
     *      unreferenced (directory-swap durability would expose a
     *      half-relabeled history on object stores without atomic rename).
     *      The FIRST batch publishes the same way, so the sidecar either
-    *      exists fully formed (manifest present) or not at all.
+    *      exists fully formed (manifest present) or not at all; its
+    *      driver-built inserts are ONE partition, so it writes one file
+    *      per bucket.
     *
     * Every batch adds one manifest GENERATION and [[graft.sources
     * .ManifestCommit.readManifested]] plans one scan per live
@@ -167,14 +179,24 @@ object Incremental {
     * Canonical-min invariant: a history label is the min id of its old
     * component and a fresh node's label is itself, so the quotient CC's
     * min over merged labels IS the global min member id — no rescan of
-    * members is ever needed to keep labels canonical.
+    * members is ever needed to keep labels canonical. It also makes the
+    * driver path's emptiness test count-free: a batch changes the
+    * sidecar iff it has a fresh id or a remap row, because with no fresh
+    * id every remap key is a history label, and that label's own
+    * (min-id) row carries it — so a non-empty remap always relabels at
+    * least one row. The distributed path counts its materialized update
+    * rows instead.
     *
-    * SCALE: quotient CC + remap are batch/touched-component-sized; the
-    * relabel pass is one column-pruned scan of the label table against a
-    * broadcast remap (the one history-proportional cost — the scan, not
-    * the CC), and the write is touched-partition-only. Replays converge:
-    * a re-run batch maps both endpoints of every edge to one label, the
-    * quotient is empty, and no rows change. */
+    * SCALE: under the gate the CC work is batch-sized and on the driver,
+    * and the only collects are the gate's (≤ `maxDriverQuotient` edges)
+    * and the label lookup's (≤ 2 × `maxDriverQuotient` rows). Above it
+    * the quotient CC + remap are touched-component-sized. On both paths
+    * the history-proportional costs are column-pruned scans of the label
+    * table — the label lookup and the relabel against a broadcast remap
+    * (skipped when nothing is remapped) — and the write is
+    * touched-partition-only. Replays converge: a re-run batch maps both
+    * endpoints of every edge to one label, the quotient is empty, and no
+    * rows change. */
   def incrementalComponents(spark: org.apache.spark.sql.SparkSession,
       statePath: String, newPairs: DataFrame, buckets: Int = 16,
       maxRounds: Int = 25, maxGenerations: Int = 16,
@@ -185,67 +207,21 @@ object Incremental {
     val history: Option[DataFrame] = graft.sources.ManifestCommit
       .currentSnapshot(spark, statePath)
       .map(_ => readComponents(spark, statePath))
-    // LAZY checkpoint: `mapped`'s eager checkpoint below is the first
-    // action and its node-set distinct scans every edge partition, so it
-    // doubles as the materializer — one job fewer per batch; the quotient
-    // joins then read the frozen blocks
     val edges = newPairs
       .select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .where(col("u") =!= col("v"))
-      .localCheckpoint(eager = false) // feeds the node set and both quotient joins
-    val nodes = edges.select(col("u").as("id"))
-      .union(edges.select(col("v").as("id"))).distinct()
-    // node -> current label; `fresh` marks ids the sidecar has never seen
-    val mapped = (history match {
-      case None => nodes.select(col("id"), col("id").as("lbl"),
-        lit(true).as("fresh"))
-      case Some(h) => nodes
-        .join(h.select(col("id"), col("cluster")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("cluster"), col("id")).as("lbl"),
-          col("cluster").isNull.as("fresh"))
-    }).localCheckpoint() // read by both quotient sides + the insert pass
-    val quotient = edges
-      .join(mapped.select(col("id").as("u"), col("lbl").as("la")), Seq("u"))
-      .join(mapped.select(col("id").as("v"), col("lbl").as("lb")), Seq("v"))
-      .select(least(col("la"), col("lb")).as("id_a"),
-        greatest(col("la"), col("lb")).as("id_b"))
-      .where(col("id_a") =!= col("id_b")).distinct()
-    // old->new label changes only — bounded by the batch's touched
-    // components, hence broadcastable by construction. The quotient EDGE
-    // set is NOT similarly bounded (m touched components can carry up to
-    // m(m-1)/2 distinct label pairs against at most m-1 remap rows, and a
-    // fresh-heavy first batch's quotient is the whole deduped batch edge
-    // set), so it resolves through duplicateClusters' count gate: the
-    // gate's lazy checkpoint + count materializes the two label joins
-    // once, and at or under `maxDriverQuotient` edges the driver
-    // union-find — one path-compressed pass instead of a per-batch
-    // pointer-jumping cascade of ~12 tiny jobs (measured at sf0.1:
-    // ~0.4 s and ~14 jobs per maintenance batch) — resolves it; above
-    // the gate the distributed CC does, and only the remap reaches the
-    // driver. Either way the labels are canonical-min: the quotient CC's
-    // min over merged labels is the min member id.
-    val remap = Dedup.duplicateClusters(quotient, maxRounds,
-        maxDriverEdges = maxDriverQuotient)
-      .where(col("doc_id") =!= col("cluster"))
-      .select(col("doc_id").as("old_lbl"), col("cluster").as("new_lbl"))
-    val inserts = mapped.where(col("fresh"))
-      .join(broadcast(remap), col("lbl") === col("old_lbl"), "left")
-      .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("cluster"))
-    val relabeled = history.fold(inserts.limit(0)) { h =>
-      h.join(broadcast(remap), h("cluster") === col("old_lbl"))
-        .select(h("id"), col("new_lbl").as("cluster"))
+    // (id, cluster) rows to upsert — None when the batch changes nothing
+    // — and the checkpoints they read, released after the write
+    val (changes, held) = IterUtils.gatedCollect(edges, maxDriverQuotient) match {
+      case Right(rows) => driverChanges(spark, history, rows)
+      case Left(ck) => distributedChanges(history, ck, maxRounds, maxDriverQuotient)
     }
-    // lazy checkpoint: the emptiness probe is a full count (never
-    // short-circuits) and doubles as the materializing action — the
-    // probe must not re-run the join chain, and the write below reads
-    // the materialized blocks
-    val updates = inserts.unionByName(relabeled)
-      .withColumn("bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
-      .localCheckpoint(eager = false)
     // an all-self-pair / empty first batch must NOT initialize the state:
     // an entry-less manifest would make every later read's txn-union empty
     // — leave the sidecar uninitialized until there is a row to hold
-    if (updates.count() != 0L) {
+    changes.foreach { rows =>
+      val updates = rows
+        .withColumn("bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
       if (history.isEmpty)
         graft.sources.ManifestCommit.overwriteViaManifest(spark, statePath,
           Seq("bucket"), replaceAll = true) { txn =>
@@ -273,9 +249,107 @@ object Incremental {
         }
       }
     }
-    IterUtils.unpersistCheckpoint(edges)
-    IterUtils.unpersistCheckpoint(mapped)
-    IterUtils.unpersistCheckpoint(updates)
+    held.foreach(IterUtils.unpersistCheckpoint)
+  }
+
+  /** [[incrementalComponents]] at or under the gate: the collected batch
+    * `edges` (u, v) resolve against the touched ids' current labels on
+    * the driver. Returns the inserts plus the broadcast relabel of the
+    * history — lazily checkpointed, so the upsert's two reads of it (its
+    * touched-bucket set and its merge) relabel the history once — and
+    * that checkpoint; None when neither a fresh id nor a changed label
+    * exists (the canonical-min emptiness rule). */
+  private def driverChanges(spark: org.apache.spark.sql.SparkSession,
+      history: Option[DataFrame],
+      edges: Array[Row]): (Option[DataFrame], Seq[DataFrame]) = {
+    val es = edges.map(r => (r.getLong(0), r.getLong(1)))
+    val touched = es.flatMap(e => Array(e._1, e._2)).distinct
+    // the bounded lookup: `id` is the label table's key, so at most
+    // |touched| rows come back. A map-side semi-join against a broadcast
+    // variable — one job, where a broadcast-hinted join of a driver-built
+    // relation pays a second job to broadcast it
+    val current: Map[Long, Long] = history.fold(Map.empty[Long, Long]) { h =>
+      val ids = spark.sparkContext.broadcast(touched.toSet)
+      try h.select(col("id"), col("cluster")).rdd
+        .filter(r => ids.value.contains(r.getLong(0)))
+        .map(r => (r.getLong(0), r.getLong(1))).collect().toMap
+      finally ids.destroy()
+    }
+    def label(id: Long): Long = current.getOrElse(id, id)
+    val roots = IterUtils.unionByMin(
+      es.map { case (u, v) => (label(u), label(v)) }.filter(e => e._1 != e._2)).toMap
+    val remap = roots.filter { case (l, r) => l != r }
+    val inserts = touched.filterNot(current.contains)
+      .map(id => Row(id, roots.getOrElse(id, id)))
+    if (inserts.isEmpty && remap.isEmpty) return (None, Nil)
+    // ONE partition, so a first batch writes one file per bucket
+    val insertDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(inserts.toSeq, 1),
+      IterUtils.longSchema("id", "cluster"))
+    history match {
+      case Some(h) if remap.nonEmpty =>
+        val remapDf = spark.createDataFrame(java.util.Arrays.asList(
+            remap.toSeq.map { case (o, n) => Row(o, n) }: _*),
+          IterUtils.longSchema("old_lbl", "new_lbl"))
+        val updates = insertDf
+          .unionByName(h.join(broadcast(remapDf), h("cluster") === col("old_lbl"))
+            .select(h("id"), col("new_lbl").as("cluster")))
+          .localCheckpoint(eager = false)
+        (Some(updates), Seq(updates))
+      case _ => (Some(insertDf), Nil)
+    }
+  }
+
+  /** [[incrementalComponents]] above the gate, over the gate's
+    * materialized `edges` checkpoint: the label join, the quotient and
+    * [[Dedup.duplicateClusters]] run distributed. Returns the update rows
+    * (None when their count is 0) and the checkpoints they read. */
+  private def distributedChanges(history: Option[DataFrame],
+      edges: DataFrame, maxRounds: Int,
+      maxDriverQuotient: Long): (Option[DataFrame], Seq[DataFrame]) = {
+    val nodes = edges.select(col("u").as("id"))
+      .union(edges.select(col("v").as("id"))).distinct()
+    // node -> current label; `fresh` marks ids the sidecar has never seen
+    val mapped = (history match {
+      case None => nodes.select(col("id"), col("id").as("lbl"),
+        lit(true).as("fresh"))
+      case Some(h) => nodes
+        .join(h.select(col("id"), col("cluster")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("cluster"), col("id")).as("lbl"),
+          col("cluster").isNull.as("fresh"))
+    }).localCheckpoint() // read by both quotient sides + the insert pass
+    val quotient = edges
+      .join(mapped.select(col("id").as("u"), col("lbl").as("la")), Seq("u"))
+      .join(mapped.select(col("id").as("v"), col("lbl").as("lb")), Seq("v"))
+      .select(least(col("la"), col("lb")).as("id_a"),
+        greatest(col("la"), col("lb")).as("id_b"))
+      .where(col("id_a") =!= col("id_b")).distinct()
+    // old->new label changes only — bounded by the batch's touched
+    // components, hence broadcastable by construction. The quotient EDGE
+    // set is NOT similarly bounded (m touched components can carry up to
+    // m(m-1)/2 distinct label pairs against at most m-1 remap rows), so
+    // it resolves through duplicateClusters' count gate: above
+    // `maxDriverQuotient` edges the distributed CC resolves it and only
+    // the remap reaches the driver. Either way the labels are
+    // canonical-min: the quotient CC's min over merged labels is the min
+    // member id.
+    val remap = Dedup.duplicateClusters(quotient, maxRounds,
+        maxDriverEdges = maxDriverQuotient)
+      .where(col("doc_id") =!= col("cluster"))
+      .select(col("doc_id").as("old_lbl"), col("cluster").as("new_lbl"))
+    val inserts = mapped.where(col("fresh"))
+      .join(broadcast(remap), col("lbl") === col("old_lbl"), "left")
+      .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("cluster"))
+    val relabeled = history.fold(inserts.limit(0)) { h =>
+      h.join(broadcast(remap), h("cluster") === col("old_lbl"))
+        .select(h("id"), col("new_lbl").as("cluster"))
+    }
+    // lazy checkpoint: the emptiness probe is a full count (never
+    // short-circuits) and doubles as the materializing action — the
+    // probe must not re-run the join chain, and the write reads the
+    // materialized blocks
+    val updates = inserts.unionByName(relabeled).localCheckpoint(eager = false)
+    (Some(updates).filter(_.count() != 0L), Seq(edges, mapped, updates))
   }
 
   /** Reads the incremental-components sidecar at its current manifest

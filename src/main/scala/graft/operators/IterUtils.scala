@@ -32,14 +32,17 @@ private[graft] object IterUtils {
 
   // -------------------------------------------------------------------
   // The COUNT GATE shared by every iterative family with a driver
-  // replica (duplicateClusters, and through it incrementalComponents;
-  // the k-core peel, Brandes betweenness, PageRank and label
-  // propagation in GraphOps; BPE training; TextRank). At or under the
-  // gate the small relation is collected once and the loop runs in
-  // memory, replicating the distributed program's arithmetic; above it
-  // the distributed loop runs, so at corpus scale the gate simply never
-  // fires. The helpers below are the Spark semantics those replicas
-  // copy by hand: string sort order, Round(x, 0), dense id interning.
+  // replica (duplicateClusters; incrementalComponents, which gates its
+  // batch edges and, above that gate, its quotient through
+  // duplicateClusters; the k-core peel, Brandes betweenness, PageRank
+  // and label propagation in GraphOps; BPE training; TextRank). At or
+  // under the gate the small relation is collected once and the loop
+  // runs in memory, replicating the distributed program's arithmetic;
+  // above it the distributed loop runs, so at corpus scale the gate
+  // simply never fires. The helpers below are what those replicas
+  // share: the union-by-min CC, driver-built long frames, and the Spark
+  // semantics they copy by hand (string sort order, Round(x, 0), dense
+  // id interning).
   // -------------------------------------------------------------------
 
   /** Default row cap of every count gate: 2^20 rows, i.e. 16 MB of long
@@ -72,6 +75,38 @@ private[graft] object IterUtils {
       case Right(rows) => Some(rows)
       case Left(ck) => unpersistCheckpoint(ck); None
     }
+
+  /** Connected components of a driver-side long edge list: one
+    * path-compressed union-find whose merges keep the SMALLER root, so
+    * every endpoint maps to the min id of its component — the fixpoint
+    * of min-label propagation, i.e. the canonical-min labels the
+    * distributed CC loops produce. Returns (endpoint, root) for every
+    * distinct endpoint, in first-seen order. */
+  def unionByMin(edges: Iterable[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x // path compression
+      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keysIterator.toArray.map(x => (x, find(x)))
+  }
+
+  /** Non-null long columns for a frame the driver builds from `Row`s.
+    * `createDataFrame(rows, schema)` converts through the schema; a
+    * `Seq[(Long, Long)].toDF` instead derives a product encoder through
+    * Scala runtime reflection on every call. */
+  def longSchema(names: String*): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+  }
 
   /** Spark's string SortOrder on the driver: byte-wise UTF-8 (code-point
     * order) — NOT String.compareTo's UTF-16 code-unit order, which

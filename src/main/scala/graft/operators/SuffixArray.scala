@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Why prefix doubling at cluster scale: the naive alternative shuffles
   * every D-word window (D × corpus tokens of STRING payload, the q109
   * rolling-hash shape but exact) — this instead shuffles ⌈log₂ D⌉
-  * rounds of fixed-width (rank, rank) LONG pairs, each round one
-  * hash-join on (doc, off+k) plus one range-partitioned dense rank.
+  * rounds of fixed-width (rank, rank) LONG pairs, each round one hash
+  * exchange on `doc` with an in-partition slide to (doc, off+k) — no
+  * join, no driver round trip — plus one range-partitioned dense rank.
   * Rank width is independent of D: doubling the window depth adds ONE
   * round, not another corpus copy.
   *
@@ -39,7 +40,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * production setting maps to depth=64. Cost grows in ROUNDS =
   * log₂(depth), not in depth itself: shuffle volume 256→439 MB
   * (×1.71) and ~9-10 extra jobs per extra round from depth 8→64 on the
-  * sf1 corpus, zero spill at every depth (rows never widen). Deeper
+  * sf1 corpus (measured while the shift still ran a range exchange and
+  * a boundary collect of its own, two jobs per round more than now),
+  * zero spill at every depth (rows never widen). Deeper
   * windows simultaneously shrink downstream duplicate-span mass, so
   * end-to-end [[exactSubstrDedup]] cost moves sub-linearly in rounds.
   */
@@ -134,18 +137,15 @@ object SuffixArray {
       // `df` needs NO checkpoint of its own: it is a pure map-side rank
       // assignment over the (r1, r2)-ranged relation that
       // denseRankPairsCounted already materialized in checkpoint storage,
-      // so every downstream pass (the next round's range sampling +
-      // shuffle, or the caller's joins) replays only that cheap map over
+      // so every downstream pass (the next round's shift exchange, or the
+      // caller's joins) replays only that cheap map over
       // cached blocks — checkpointing it again cost one extra job per
       // round and doubled the stored bytes.
-      val (shifted, sCkpt) = shiftRanks(ranked, k.toInt, nParts)
-      // the slide output maps over sCkpt's frozen blocks only — the
-      // previous round's backing checkpoint is now dead
-      IterUtils.unpersistCheckpoint(live)
+      val shifted = shiftRanks(ranked, k.toInt, nParts)
       val (df, groups, dCkpt) = denseRankPairsCounted(shifted, nParts)
-      // the stats collect materialized dCkpt; the (doc, off)-ranged
-      // relation behind the slide is now dead too
-      IterUtils.unpersistCheckpoint(sCkpt)
+      // the slide reads `live` lazily; the stats collect has now
+      // materialized dCkpt, so the previous round's checkpoint is dead
+      IterUtils.unpersistCheckpoint(live)
       live = dCkpt
       ranked = df
       distinct = groups == nPos
@@ -232,76 +232,47 @@ object SuffixArray {
   /** (doc, off, r1, r2) where r2 is the rank at (doc, off + k), or -1
     * past the document end — WITHOUT the self-join the textbook round
     * would run (whose both sides shuffle the whole position table).
-    * Offsets are DENSE per document, so the row k positions ahead in
-    * global (doc, off) order carries offset off+k whenever it shares
-    * the doc: one range exchange, a bounded boundary collect (first k
-    * rows per partition, ≤ partitions × depth/2 rows on the driver),
-    * and a map-side slide — the [[SortedNeighborhood]] continuation
-    * pattern, partition index taken from the RDD's own split (the
-    * round-17 composition contract). Cuts each doubling round from
-    * three corpus exchanges to two. Also returns the ranged backing
-    * checkpoint so the caller can release it deterministically once its
-    * consumer is materialized. */
+    * One hash exchange on `doc` puts every document whole into one
+    * partition, and the in-partition sort on (doc, off) lays it out in
+    * offset order. Offsets are DENSE per document, so the row k positions
+    * ahead carries offset off+k whenever it shares the doc: a map-side
+    * slide with a (k+1)-row buffer pairs every position with no driver
+    * round trip — no range sampling, no boundary collect, no
+    * cross-partition continuation. Trade-off: one task sorts a whole
+    * document, so a partition is at least its longest document; Spark's
+    * sorter spills, and the slide itself holds only k+1 rows. The result
+    * is lazy: it reads `ranked`'s backing checkpoint, which must stay
+    * persisted until the consumer has materialized its own. */
   private[graft] def shiftRanks(ranked: DataFrame, k: Int,
-      nParts: Int): (DataFrame, DataFrame) = {
-    val spark = ranked.sparkSession
-    // lazy checkpoint: the heads collect below reads every partition
-    // (block-store caching materializes whole partitions even under a
-    // take), so it doubles as the materializing action; the slide pass
-    // then reads the same frozen blocks — head pass + slide still see
-    // identical ranges, one job cheaper
-    val ranged = ranked.repartitionByRange(nParts, col("doc"), col("off"))
+      nParts: Int): DataFrame = {
+    val ranged = ranked.repartition(nParts, col("doc"))
       .sortWithinPartitions(col("doc"), col("off"))
-      .localCheckpoint(eager = false)
     val cols = ranged.columns
     val (iDoc, iOff, iRank) =
       (cols.indexOf("doc"), cols.indexOf("off"), cols.indexOf("rank"))
-    val heads: Map[Int, Array[(Long, Long)]] = ranged.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val h = it.take(k).map(r => (r.getLong(iDoc), r.getLong(iRank))).toArray
-        if (h.isEmpty) Iterator.empty else Iterator((pid, h))
-      }.collect().toMap
-    val maxPid = ranged.rdd.getNumPartitions
-    val bc = spark.sparkContext.broadcast(heads)
     val outSchema = StructType(Seq(
       StructField("doc", LongType, nullable = false),
       StructField("off", LongType, nullable = false),
       StructField("r1", LongType, nullable = false),
       StructField("r2", LongType, nullable = false)))
     val kk = k
-    val out = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      // first kk rows of the FOLLOWING partitions, in order — never more
-      // than kk are consumed (short partitions walk further forward)
-      val continuation = ((pid + 1) until maxPid).iterator
-        .flatMap(p => bc.value.getOrElse(p, Array.empty[(Long, Long)]).iterator)
-        .take(kk)
-      // local rows emit; continuation rows only ever serve as lookahead
-      val tagged = it.map(r =>
-        (r.getLong(iDoc), r.getLong(iOff), r.getLong(iRank), true)) ++
-        continuation.map(t => (t._1, 0L, t._2, false))
-      val buf = scala.collection.mutable.Queue.empty[(Long, Long, Long, Boolean)]
+    val out = ranged.rdd.mapPartitions { it =>
+      val rows = it.map(r => (r.getLong(iDoc), r.getLong(iOff), r.getLong(iRank)))
+      val buf = scala.collection.mutable.Queue.empty[(Long, Long, Long)]
       new Iterator[Row] {
-        private var pending: Row = null
-        private def advance(): Unit = {
-          while (pending == null && (tagged.hasNext || buf.exists(_._4))) {
-            while (tagged.hasNext && buf.size < kk + 1) buf.enqueue(tagged.next())
-            if (buf.nonEmpty && (buf.size == kk + 1 || !tagged.hasNext)) {
-              val (doc, off, r1, isLocal) = buf.dequeue()
-              if (isLocal) {
-                // dense offsets: the row kk ahead is (doc, off+kk) iff it
-                // exists and shares the doc — rows between are same-doc
-                val r2 = if (buf.size >= kk && buf(kk - 1)._1 == doc)
-                  buf(kk - 1)._3 else -1L
-                pending = Row(doc, off, r1, r2)
-              }
-            }
-          }
+        def hasNext: Boolean = buf.nonEmpty || rows.hasNext
+        def next(): Row = {
+          while (rows.hasNext && buf.size < kk + 1) buf.enqueue(rows.next())
+          val (doc, off, r1) = buf.dequeue()
+          // dense offsets: the row kk ahead is (doc, off+kk) iff it exists
+          // and shares the doc — rows between are same-doc
+          val r2 = if (buf.size >= kk && buf(kk - 1)._1 == doc) buf(kk - 1)._3
+            else -1L
+          Row(doc, off, r1, r2)
         }
-        def hasNext: Boolean = { advance(); pending != null }
-        def next(): Row = { advance(); val r = pending; pending = null; r }
       }
     }
-    (spark.createDataFrame(out, outSchema), ranged)
+    ranked.sparkSession.createDataFrame(out, outSchema)
   }
 
   /** Distributed dense rank over the total order (r1, r2): range

@@ -305,35 +305,74 @@ class Round16OpsSpec extends GraftSpec {
 
   test("incrementalComponents: an over-gate quotient resolves through the distributed CC, labels identical") {
     import graft.operators.{Dedup, Incremental}
-    def batch(pairs: (Long, Long)*): org.apache.spark.sql.DataFrame =
-      pairs.toSeq.toDF("id_a", "id_b")
     def state(root: String): Seq[(Long, Long)] =
       Incremental.readComponents(spark, root)
         .select("id", "cluster").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    // a dense merge pattern: 4 pre-existing components fully cross-linked
-    // by the second batch — 6 distinct quotient edges against 3 remap rows
-    val b1 = batch((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L))
-    val b2 = batch((1L, 3L), (1L, 5L), (1L, 7L), (3L, 5L), (3L, 7L), (5L, 7L))
+    val batches = Seq(
+      "first" -> Seq((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L)),
+      // a dense merge pattern: 4 pre-existing components fully
+      // cross-linked — 6 distinct quotient edges against 3 remap rows
+      "cross-link" -> Seq((1L, 3L), (1L, 5L), (1L, 7L), (3L, 5L), (3L, 7L), (5L, 7L)),
+      "replay" -> Seq((1L, 3L), (1L, 5L), (1L, 7L), (3L, 5L), (3L, 7L), (5L, 7L)),
+      // fresh ids only: every row written is an insert
+      "insert-only" -> Seq((10L, 11L), (12L, 13L)),
+      // no fresh id: the change is a history relabel alone, so only the
+      // count-free emptiness rule (a remap row implies a relabeled row)
+      // lets it through
+      "remap-only" -> Seq((13L, 11L)),
+      "all-self-pair" -> Seq((5L, 5L), (14L, 14L)))
     val rootFast = java.nio.file.Files.createTempDirectory("graft-r22-ccf")
       .resolve("state").toString
-    Incremental.incrementalComponents(spark, rootFast, b1)
-    Incremental.incrementalComponents(spark, rootFast, b2)
     val rootSlow = java.nio.file.Files.createTempDirectory("graft-r22-ccs")
       .resolve("state").toString
-    // gate of 0 forces EVERY quotient through the distributed fallback
-    Incremental.incrementalComponents(spark, rootSlow, b1,
-      maxDriverQuotient = 0L)
-    Incremental.incrementalComponents(spark, rootSlow, b2,
-      maxDriverQuotient = 0L)
-    val twin = Dedup.duplicateClusters(
-        batch((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L), (1L, 3L), (1L, 5L),
-          (1L, 7L), (3L, 5L), (3L, 7L), (5L, 7L)))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    assert(state(rootFast) == twin,
-      "driver union-find fast path must match the batch CC twin")
-    assert(state(rootSlow) == twin,
-      "distributed fallback must produce identical canonical-min labels")
+    var seen = Seq.empty[(Long, Long)]
+    for ((name, pairs) <- batches) {
+      val batch = pairs.toDF("id_a", "id_b")
+      Incremental.incrementalComponents(spark, rootFast, batch)
+      // gate of 0 forces EVERY batch through the distributed path
+      Incremental.incrementalComponents(spark, rootSlow, batch,
+        maxDriverQuotient = 0L)
+      seen ++= pairs.filter { case (a, b) => a != b }
+      val twin = Dedup.duplicateClusters(seen.toDF("id_a", "id_b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      assert(state(rootFast) == state(rootSlow),
+        s"$name: driver and distributed paths must write identical labels")
+      assert(state(rootFast) == twin,
+        s"$name: the sidecar must match the batch CC twin over the union")
+    }
+  }
+
+  test("incrementalComponents: a warm under-gate maintenance batch runs at most 12 jobs") {
+    import graft.operators.Incremental
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val first = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("id_a", "id_b")
+    // fresh ids, a merge of two history components, a history relabel
+    val second = Seq((2L, 7L), (4L, 6L), (11L, 12L)).toDF("id_a", "id_b")
+    def root() = java.nio.file.Files.createTempDirectory("graft-cc-jobs")
+      .resolve("state").toString
+    val warm = root()
+    Seq(first, second).foreach(b => Incremental.incrementalComponents(spark, warm, b))
+    val counted = root()
+    Incremental.incrementalComponents(spark, counted, first)
+    // the gate's count and collect, one label lookup, the remap broadcast
+    // and the upsert (with the label table's per-generation footer reads)
+    // fit in 12; resolving the batch with Spark jobs took 18
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(j.stageInfos.map(_.name).mkString(" + "))
+    }
+    sc.addSparkListener(l)
+    try {
+      Incremental.incrementalComponents(spark, counted, second)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(Incremental.readComponents(spark, counted).where("cluster = 3")
+      .count() == 4L)
+    assert(jobs.size <= 12, jobs.toArray.mkString("\n"))
   }
 
   test("incrementalComponents: a gate of 0 runs the distributed CC loop (round budget enforced)") {

@@ -30,13 +30,20 @@ class SuffixArraySpec extends GraftSpec {
     (5L, "the cat") // shorter than depth: sentinel-extended suffixes
   )
 
+  // one document longer than all the others together, documents shorter
+  // than the shift k, and (at 16 partitions) more partitions than
+  // documents: the shift holds each document whole in one partition
+  private val skewed = (10L, (0 until 64).map(i => "abc".charAt(i * i % 7 % 3).toString)
+      .mkString(" ")) +: Seq(
+    (11L, "a"), (12L, "b a"), (13L, "a b c"), (14L, "c"), (15L, "b c a b"))
+
   test("rankPrefixes == brute-force dense rank of depth-bounded suffixes") {
-    val docs = fixture.toDF("doc_id", "text")
-    for (depth <- Seq(1, 4, 8)) {
-      val got = SuffixArray.rankPrefixes(docs, depth = depth, partitions = 4)
+    for ((fx, parts) <- Seq((fixture, 4), (skewed, 16)); depth <- Seq(1, 4, 8)) {
+      val got = SuffixArray.rankPrefixes(fx.toDF("doc_id", "text"), depth = depth,
+          partitions = parts)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-      val want = bruteRanks(fixture, depth)
-      assert(got == want, s"depth=$depth rank table must match brute force")
+      val want = bruteRanks(fx, depth)
+      assert(got == want, s"depth=$depth partitions=$parts rank table must match brute force")
     }
   }
 
