@@ -754,6 +754,11 @@ object Dedup {
     * original order. "First" is global and deterministic: the minimum
     * (doc id, paragraph index) over all occurrences of the paragraph.
     *
+    * Precondition: `idCol` is unique. A row with a null id takes no part
+    * in choosing first occurrences, so it keeps nothing and counts every
+    * paragraph as dropped; rows sharing an id each rebuild from their
+    * own text.
+    *
     * Returns one row per input document: `idCol`, `clean_text` (the
     * surviving paragraphs re-joined with `sep`, '' when everything was
     * excised), `n_kept`, `n_dropped`. Empty paragraphs (consecutive
@@ -763,40 +768,40 @@ object Dedup {
     * SCALE: one posexplode (corpus-linear), one combinable groupBy on
     * the paragraph MD5 (128-bit — collision odds are ~n²/2¹²⁸,
     * negligible at any corpus size; the winner is min(struct), a
-    * partial-aggregating min), one hash-keyed join back, and one
-    * reassembly groupBy per doc. Never doc×doc, never paragraph-text
-    * shuffles on the agg side (the 16-byte digest is the key). Skewed
-    * boilerplate paragraphs (the SAME banner in 10^9 docs) concentrate
-    * one hash key on the AGG side only — a combinable min, handled
-    * map-side — while the join side stays doc-partitioned. */
+    * partial-aggregating min), one combinable groupBy of the winning
+    * (doc, idx) pairs by doc, and one left join of the documents to those
+    * index lists on id. Never doc×doc, and no exchange carries an
+    * exploded paragraph: the two groupBys move only digests and (doc,
+    * idx) pairs, the join moves each document's own row at most once,
+    * and that row rebuilds its `clean_text` from its own text after the
+    * join. Skewed boilerplate paragraphs (the SAME banner in 10^9 docs)
+    * concentrate one digest key on the first groupBy only — a combinable
+    * min, handled map-side. */
   def paragraphDedup(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", sep: String = "\n"): DataFrame = {
-    val paras = docs
-      .select(col(idCol), posexplode(split(col(textCol),
-        java.util.regex.Pattern.quote(sep))).as(Seq("idx", "para")))
+    val sepRe = java.util.regex.Pattern.quote(sep)
+    val winners = docs.where(col(idCol).isNotNull)
+      .select(col(idCol), posexplode(split(col(textCol), sepRe)).as(Seq("idx", "para")))
       .where(trim(col("para")) =!= "")
-      .select(col(idCol), col("idx"), col("para"),
-        md5(col("para")).as("ph"))
-    val winners = paras
-      .groupBy("ph")
+      .groupBy(md5(col("para")).as("ph"))
       .agg(min(struct(col(idCol), col("idx"))).as("w"))
-      .select(col("ph"), col("w").getField(idCol).as("w_id"),
-        col("w").getField("idx").as("w_idx"))
-    val kept = paras.join(winners, Seq("ph"))
-      .withColumn("keep", col(idCol) === col("w_id") && col("idx") === col("w_idx"))
-    val perDoc = kept.groupBy(idCol)
-      .agg(
-        array_join(transform(array_sort(
-          collect_list(when(col("keep"), struct(col("idx"), col("para"))))),
-          _.getField("para")), sep).as("clean_text"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("keep"), 0L).otherwise(1L)).as("n_dropped"))
-    // docs whose text had no non-empty paragraphs still get a row
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+      .groupBy(col("w").getField(idCol).as(idCol))
+      .agg(collect_list(col("w").getField("idx")).as("keep"))
+    // each step is its own projection so the split and the filter run
+    // once per row: Catalyst does not inline an expensive expression
+    // that the next projection reads more than once
+    docs.select(col(idCol), col(textCol).as("text"))
+      .join(winners, Seq(idCol), "left")
+      .select(col(idCol), col("keep"), filter(
+        transform(split(coalesce(col("text"), lit("")), sepRe),
+          (p, i) => struct(i.as("idx"), p.as("para"))),
+        x => trim(x.getField("para")) =!= "").as("paras"))
+      .select(col(idCol), col("paras"),
+        filter(col("paras"), x => array_contains(col("keep"), x.getField("idx"))).as("kept"))
       .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
+        array_join(transform(col("kept"), _.getField("para")), sep).as("clean_text"),
+        size(col("kept")).cast("long").as("n_kept"),
+        (size(col("paras")) - size(col("kept"))).cast("long").as("n_dropped"))
   }
 
   /** Canonical-collapse: fold a crawl corpus on the publisher's own

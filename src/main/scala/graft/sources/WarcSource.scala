@@ -5,10 +5,11 @@ import java.nio.charset.{Charset, StandardCharsets}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.Partitioner
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.{Partitioner, SerializableWritable, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.{BinaryType, BooleanType, IntegerType, StringType, StructField, StructType}
 
 /** One WARC record with its parsed named headers (the ISO 28500 set the
   * engine consumes) plus the raw payload block. `recordIdx` is the
@@ -37,8 +38,8 @@ case class WarcRecord(file: String, recordIdx: Int, warcType: String,
   * split at member boundaries; the `zstd` codec writes one zstd FRAME
   * per record the same way (the emerging .warc.zst companion layout).
   *
-  * Read side: Spark `binaryFile` scan (WARC, like tar/zip, has no native
-  * Spark codec) + a strict record walker — version line, header block,
+  * Read side: one read task per shard file (WARC, like tar/zip, has no
+  * native Spark codec) + a strict record walker — version line, header block,
   * Content-Length framing, CRLF CRLF record boundary — that throws with
   * file+offset on any framing violation rather than resyncing silently.
   * The walker is a STREAMING parser over an InputStream: compressed
@@ -49,12 +50,16 @@ case class WarcRecord(file: String, recordIdx: Int, warcType: String,
   * watch-item).
   *
   * SCALE: parallelism = shard count on both sides (a 100-TB crawl at the
-  * customary ~1 GB/shard is ~10^5 tasks). Batch read tasks stream the
-  * shard through a PortableDataStream — memory is O(one record) TOTAL,
-  * no whole-file buffer at either layer; the streaming twin still pays
-  * the binaryFile whole-content envelope (the file-source has no
-  * streamed-content form) plus one decompressed record. No state, no
-  * shuffle beyond the writer's single ranged exchange.
+  * customary ~1 GB/shard is ~10^5 tasks). The batch reader makes one
+  * partition per listed shard itself: `sc.binaryFiles` would pack whole
+  * files into splits of up to max(`spark.files.openCostInBytes`, total
+  * bytes / parallelism), so shards under that cap share one task (four
+  * 372 KB shards read as ONE partition). Each read task opens its shard
+  * and streams it — memory is O(one record) TOTAL, no whole-file buffer
+  * at either layer; the streaming twin still pays the binaryFile
+  * whole-content envelope (the file-source has no streamed-content form)
+  * plus one decompressed record. No state, no shuffle beyond the
+  * writer's single ranged exchange.
   */
 object WarcSource {
 
@@ -316,30 +321,37 @@ object WarcSource {
     else records(spark, dir).filter(_.warcType == "response").count()
   }
 
+  /** Derived once per JVM: a product encoder built through runtime
+    * reflection costs tens of ms per derivation. */
+  private lazy val RecordEncoder: Encoder[WarcRecord] = Encoders.product[WarcRecord]
+
   /** All records of all `shard-*.warc[.gz|.zst]` files under `path`, in
-    * record order with ordinals, every record strictly framed.
-    *
-    * Batch reads go through `sc.binaryFiles`' PortableDataStream — the
-    * task OPENS the shard and the walker consumes it record by record,
-    * so task memory is O(one record) TOTAL: not even the compressed
-    * shard bytes are buffered (the streaming twin below still pays the
-    * binaryFile whole-content envelope — the file-source has no
-    * streamed-content form). At the customary ~1 GB .warc.gz shard
-    * that is the difference between ~5 GB/task (whole-file + inflate)
-    * and a few hundred KB. */
-  def records(spark: SparkSession, path: String): Dataset[WarcRecord] = {
-    import spark.implicits._
-    val rdd = spark.sparkContext
-      // minPartitions = defaultParallelism: binaryFiles' default is 2,
-      // which PACKS the shard files into two read tasks — one task per
-      // shard (files don't split) is the read parallelism WARC shards
-      // exist to provide
-      .binaryFiles(s"$path/shard-*.warc*",
-        spark.sparkContext.defaultParallelism)
-      .flatMap { case (file, pds) =>
-        parse(file, wrap(file, pds.open()))
-      }
-    spark.createDataset(rdd)
+    * record order with ordinals, every record strictly framed. Throws
+    * when no shard matches. */
+  def records(spark: SparkSession, path: String): Dataset[WarcRecord] =
+    spark.createDataset(recordRdd(spark, path))(RecordEncoder)
+
+  /** One partition per shard, in path order. The driver lists the shards;
+    * each task opens its own through the session's Hadoop conf and the
+    * walker consumes it record by record, so task memory is O(one
+    * record) TOTAL: not even the compressed shard bytes are buffered. At
+    * the customary ~1 GB .warc.gz shard that is the difference between
+    * ~5 GB/task (whole-file + inflate) and a few hundred KB. */
+  private def recordRdd(spark: SparkSession, path: String): RDD[WarcRecord] = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val pattern = new Path(path, "shard-*.warc*")
+    val shards = Option(pattern.getFileSystem(hadoopConf).globStatus(pattern))
+      .getOrElse(Array.empty).map(_.getPath.toString).sorted
+    if (shards.isEmpty) throw new java.io.FileNotFoundException(
+      s"no WARC shard matches $pattern")
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableWritable(hadoopConf))
+    sc.parallelize(shards.toSeq, shards.length).flatMap { file =>
+      val p = new Path(file)
+      val in = wrap(file, p.getFileSystem(conf.value.value).open(p))
+      TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+      parse(file, in)
+    }
   }
 
   /** Streaming twin of [[records]]: a `binaryFile` file-source stream
@@ -348,15 +360,17 @@ object WarcSource {
     * `Trigger.AvailableNow` run picks up only newly-landed shards. Land
     * under unique names: the tracker keys by path. */
   def recordsStream(spark: SparkSession, landingDir: String): Dataset[WarcRecord] = {
-    import spark.implicits._
-    val binarySchema = org.apache.spark.sql.types.StructType.fromDDL(
+    val binarySchema = StructType.fromDDL(
       "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
     spark.readStream.format("binaryFile")
       .schema(binarySchema)
       .option("pathGlobFilter", "*.warc*")
       .load(landingDir)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) => parse(file, open(file, bytes)) }
+      .select("path", "content")
+      .flatMap { r =>
+        val file = r.getString(0)
+        parse(file, open(file, r.getAs[Array[Byte]](1)))
+      }(RecordEncoder)
   }
 
   /** Splits an `application/http` payload at the first CRLF CRLF into
@@ -562,26 +576,37 @@ object WarcSource {
     * Transfer-Encoding header are carried alongside so a corpus can
     * audit its encoding mix. */
   def responseBodies(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    records(spark, path).filter(_.warcType == "response")
-      .map { r =>
-        val (status, hdrs, rawBody) = httpPartsWithHeaders(r.payload)
-        val (body, contentEnc, chunked) = decodeHttpBody(hdrs, rawBody)
-        val (cs, text) = resolveCharset(hdrs.get("content-type"), body)
-        val code = status.split(" ", 3) match {
-          case parts if parts.length >= 2 && parts(1).forall(_.isDigit) =>
-            parts(1).toInt
-          case _ => -1
-        }
-        (r.file, r.recordIdx, r.targetUri, status, code,
-          hdrs.getOrElse("location", ""), text, cs,
-          cs != StandardCharsets.UTF_8.name(), contentEnc, chunked,
-          hdrs.getOrElse("transfer-encoding", "").trim.toLowerCase)
+    val rows = recordRdd(spark, path).filter(_.warcType == "response").map { r =>
+      val (status, hdrs, rawBody) = httpPartsWithHeaders(r.payload)
+      val (body, contentEnc, chunked) = decodeHttpBody(hdrs, rawBody)
+      val (cs, text) = resolveCharset(hdrs.get("content-type"), body)
+      val code = status.split(" ", 3) match {
+        case parts if parts.length >= 2 && parts(1).forall(_.isDigit) =>
+          parts(1).toInt
+        case _ => -1
       }
-      .toDF("file", "record_idx", "uri", "status", "status_code",
-        "location", "body", "charset", "was_transcoded",
-        "content_encoding", "was_chunked", "transfer_encoding")
+      Row(r.file, r.recordIdx, r.targetUri, status, code,
+        hdrs.getOrElse("location", ""), text, cs,
+        cs != StandardCharsets.UTF_8.name(), contentEnc, chunked,
+        hdrs.getOrElse("transfer-encoding", "").trim.toLowerCase)
+    }
+    spark.createDataFrame(rows, ResponseSchema)
   }
+
+  /** [[responseBodies]]' columns; the primitive ones are never null. */
+  private val ResponseSchema: StructType = StructType(Seq(
+    StructField("file", StringType),
+    StructField("record_idx", IntegerType, nullable = false),
+    StructField("uri", StringType),
+    StructField("status", StringType),
+    StructField("status_code", IntegerType, nullable = false),
+    StructField("location", StringType),
+    StructField("body", StringType),
+    StructField("charset", StringType),
+    StructField("was_transcoded", BooleanType, nullable = false),
+    StructField("content_encoding", StringType),
+    StructField("was_chunked", BooleanType, nullable = false),
+    StructField("transfer_encoding", StringType)))
 
   /** Decompression wrapper for one shard stream: gzip and zstd both
     * read their concatenated per-record members transparently, member
