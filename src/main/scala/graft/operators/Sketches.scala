@@ -170,9 +170,9 @@ object Sketches {
   /** [[bloomBuild]]'s word layout computed per PARQUET FILE in one
     * distributed column-pruned pass (`input_file_name` groups): output
     * (file, w, bits) is sparse — absent words are zero. Feeds the
-    * manifest's `.bloom` sidecar
-    * ([[graft.sources.ManifestCommit.publishBloom]]): point-lookup file
-    * skipping where min/max zone maps cannot cut (high-cardinality
+    * manifest's `.bloom` sidecar (a commit's `bloomCols`, see
+    * [[graft.sources.ManifestCommit.overwriteViaManifest]]): point-lookup
+    * file skipping where min/max zone maps cannot cut (high-cardinality
     * values interleaved across files).
     *
     * SCALE: the groupBy is map-side combined on (file, word) — a task

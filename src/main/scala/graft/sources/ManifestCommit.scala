@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Manifest-committed partitioned table: the object-store-safe durability
-  * story [[TableWriters.overwriteViaStaging]] explicitly defers
-  * (rename-aside needs atomic DIRECTORY rename, which HDFS/POSIX have and
-  * S3-style stores do not).
+/** Manifest-committed partitioned table: the engine's one commit protocol
+  * for tables that are upserted, compacted or read while they are written.
+  * It needs neither atomic DIRECTORY rename (which HDFS/POSIX have and
+  * S3-style stores do not) nor a single writer per table: the only atomic
+  * step is creating one manifest file (see DESIGN.md "One commit protocol").
   *
   * Layout (the public Delta/Iceberg log model, reduced to its commit core):
   * {{{
@@ -40,8 +41,7 @@ import org.apache.spark.sql.functions._
   * so even a 100k-partition table commits kilobytes; reads group entries
   * by txn and issue one parquet scan per txn generation, so manifest age —
   * not table size — bounds planning fan-out (compaction collapses
-  * generations). Data-side cost is identical to the staged variant: only
-  * touched partitions are written.
+  * generations). Only touched partitions are written.
   *
   * DATA SKIPPING: commits made with `statCols` additionally publish a
   * `.stats` sidecar per manifest version — file-level min/max lifted from
@@ -72,12 +72,42 @@ object ManifestCommit {
   private val BloomSuffix = ".bloom"
   private val HllSuffix = ".hll"
   private val KmvSuffix = ".kmv"
+  private val SidecarSuffixes = Seq(StatsSuffix, BloomSuffix, HllSuffix, KmvSuffix)
+
+  /** DataSketches log2 of the HLL register count of every `.hll` sidecar
+    * this engine writes (~1.6% RSE). Readers take lgK from each sidecar
+    * line, so tables written with another lgK still read. */
+  private val HllLgK = 12
+
+  /** Hash functions per key of every `.bloom` sidecar this engine writes;
+    * readers take the count from each sidecar line. */
+  private val BloomHashes = 5
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifestPath(root: Path, v: Long) =
-    new Path(new Path(root, ManifestDir), f"$v%020d$ManifestSuffix")
+  /** `_manifests/<20-digit-version><suffix>`: the manifest of version `v`
+    * (`suffix` = [[ManifestSuffix]]) or one of its sidecars. */
+  private def versionFile(root: Path, v: Long, suffix: String) =
+    new Path(new Path(root, ManifestDir), f"$v%020d$suffix")
+
+  private def txnDir(root: Path, txn: String) =
+    new Path(new Path(root, DataDir), txn)
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  /** The visible (non-dot) file names under `_manifests/`: manifests and
+    * sidecars. None when the directory does not exist. */
+  private def manifestDirNames(fs: FileSystem, root: Path): Option[Seq[String]] = {
+    val mdir = new Path(root, ManifestDir)
+    if (!fs.exists(mdir)) None
+    else Some(fs.listStatus(mdir).toSeq.map(_.getPath.getName)
+      .filterNot(_.startsWith(".")))
+  }
 
   /** A resolved table state: manifest version + (relative partition path ->
     * txn dir name). `rel` is "" for an unpartitioned table. */
@@ -92,12 +122,9 @@ object ManifestCommit {
       version: Option[Long] = None): Option[Snapshot] = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) None
-    else {
-      val versions = fs.listStatus(mdir).map(_.getPath.getName)
-        .filter(n => n.endsWith(ManifestSuffix) && !n.startsWith("."))
-        .map(n => n.stripSuffix(ManifestSuffix).toLong)
+    manifestDirNames(fs, root).flatMap { names =>
+      val versions = names.filter(_.endsWith(ManifestSuffix))
+        .map(_.stripSuffix(ManifestSuffix).toLong)
       val chosen = version match {
         case Some(v) =>
           if (versions.contains(v)) Some(v)
@@ -106,13 +133,11 @@ object ManifestCommit {
         case None => versions.maxOption
       }
       chosen.map { v =>
-        val in = fs.open(manifestPath(root, v))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val entries = text.split('\n').filter(_.nonEmpty).map { line =>
-          val i = line.indexOf('\t')
-          line.substring(i + 1) -> line.substring(0, i)
-        }.toMap
+        val entries = readText(fs, versionFile(root, v, ManifestSuffix))
+          .split('\n').filter(_.nonEmpty).map { line =>
+            val i = line.indexOf('\t')
+            line.substring(i + 1) -> line.substring(0, i)
+          }.toMap
         Snapshot(v, entries)
       }
     }
@@ -120,6 +145,12 @@ object ManifestCommit {
 
   def currentSnapshot(spark: SparkSession, path: String): Option[Snapshot] =
     snapshotAt(spark, path, None)
+
+  /** [[snapshotAt]] for a table that must exist. */
+  private def requireSnapshot(spark: SparkSession, path: String,
+      version: Option[Long] = None): Snapshot =
+    snapshotAt(spark, path, version).getOrElse(
+      throw new java.io.FileNotFoundException(s"no manifest at $path"))
 
   /** Reads the table at its current manifest version — or, with
     * `version`, at a retained historical one (time travel). One scan per
@@ -130,13 +161,63 @@ object ManifestCommit {
     * public formats' add-column semantics. */
   def readManifested(spark: SparkSession, path: String,
       version: Option[Long] = None): DataFrame = {
-    val snap = snapshotAt(spark, path, version).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val snap = requireSnapshot(spark, path, version)
     snap.entries.groupBy(_._2).map { case (txn, es) =>
       val base = s"$path/$DataDir/$txn"
       val dirs = es.keys.map(rel => if (rel.isEmpty) base else s"$base/$rel").toSeq
       spark.read.option("basePath", base).parquet(dirs: _*)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** The partition a data file belongs to: its relative path minus the
+    * file name ("" for an unpartitioned table). */
+  private def partOf(rel: String): String = rel.lastIndexOf('/') match {
+    case -1 => ""
+    case i => rel.substring(0, i)
+  }
+
+  /** Every parquet file under `dir` as (path relative to `dir`, path) —
+    * the one recursive data-file walk. Relative paths are cut from the
+    * QUALIFIED names listStatus returns, so an unqualified `dir` still
+    * prefix-matches. */
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[(String, Path)] = {
+    def walk(p: Path): Seq[Path] = fs.listStatus(p).toSeq.flatMap { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
+      else Nil
+    }
+    val qdir = fs.makeQualified(dir).toString
+    walk(dir).map(f =>
+      fs.makeQualified(f).toString.stripPrefix(qdir).stripPrefix("/") -> f)
+  }
+
+  /** The data files `snap` reads, as (txn, relFile, path): every parquet
+    * file of a live txn whose partition the snapshot maps to THAT txn. A
+    * txn's files in partitions a later commit rewrote are superseded and
+    * never returned. */
+  private def liveFiles(fs: FileSystem, root: Path,
+      snap: Snapshot): Seq[(String, String, Path)] =
+    snap.entries.groupBy(_._2).toSeq.flatMap { case (txn, es) =>
+      parquetFiles(fs, txnDir(root, txn)).collect {
+        case (rel, f) if es.contains(partOf(rel)) => (txn, rel, f)
+      }
+    }
+
+  /** `value(txn, relFile)` for every live file of `snap` — or None as soon
+    * as one live file has no value: the conservative coverage contract of
+    * every metadata-only answer (a file the sidecars miss must force the
+    * real scan, never a guess). */
+  private def coveredValues[V](spark: SparkSession, path: String, snap: Snapshot)(
+      value: (String, String) => Option[V]): Option[Seq[V]] = {
+    val root = new Path(path)
+    val values = Seq.newBuilder[V]
+    val complete = liveFiles(fsOf(spark, root), root, snap).forall {
+      case (txn, rel, _) => value(txn, rel) match {
+        case Some(v) => values += v; true
+        case None => false
+      }
+    }
+    if (complete) Some(values.result()) else None
   }
 
   /** Writes a new txn directory via `writeTo`, then publishes the next
@@ -160,9 +241,8 @@ object ManifestCommit {
       partitionCols: Seq[String], replaceAll: Boolean = false,
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomBits: Int = 1 << 17, baseVersion: Option[Long] = None,
-      hllCols: Seq[String] = Nil, hllLgK: Int = 12,
-      kmvCols: Seq[String] = Nil, kmvK: Int = 256)(
-      writeTo: String => Unit): Snapshot = {
+      hllCols: Seq[String] = Nil, kmvCols: Seq[String] = Nil,
+      kmvK: Int = 256)(writeTo: String => Unit): Snapshot = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val before = currentSnapshot(spark, path)
@@ -170,20 +250,20 @@ object ManifestCommit {
       val cur = before.map(_.version).getOrElse(0L)
       if (cur != v)
         throw new java.nio.file.FileAlreadyExistsException(
-          manifestPath(root, cur).toString, null,
+          versionFile(root, cur, ManifestSuffix).toString, null,
           s"concurrent commit: table moved from version $v to $cur while " +
             "this write ran; re-run against the new snapshot")
     }
     val txn = s"txn-${java.util.UUID.randomUUID()}"
-    val txnDir = new Path(new Path(root, DataDir), txn)
-    writeTo(txnDir.toString)
+    val dir = txnDir(root, txn)
+    writeTo(dir.toString)
     def leaves(p: Path, depth: Int, rel: String): Seq[String] =
       if (depth == 0) Seq(rel)
       else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
         .filter(_.getName.contains("="))
         .flatMap(c => leaves(c, depth - 1,
           if (rel.isEmpty) c.getName else s"$rel/${c.getName}"))
-    val touched = leaves(txnDir, partitionCols.length, "").map(_ -> txn).toMap
+    val touched = leaves(dir, partitionCols.length, "").map(_ -> txn).toMap
     val baseEntries = if (replaceAll) Map.empty[String, String]
       else before.map(_.entries).getOrElse(Map.empty)
     val next = Snapshot(before.map(_.version).getOrElse(0L) + 1L,
@@ -193,12 +273,9 @@ object ManifestCommit {
     // leaves only an ignored dot-file, never a torn manifest
     val mdir = new Path(root, ManifestDir)
     if (!fs.exists(mdir)) fs.mkdirs(mdir)
-    val tmp = new Path(mdir, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(next.entries.toSeq.sorted
-      .map { case (rel, t) => s"$t\t$rel" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val target = manifestPath(root, next.version)
+    val tmp = writeTmp(fs, root, next.entries.toSeq.sorted
+      .map { case (rel, t) => s"$t\t$rel" })
+    val target = versionFile(root, next.version, ManifestSuffix)
     // the claim must be atomic ACROSS PROCESSES. Hadoop's local rename is
     // exists-then-renameTo — two JVMs can interleave between the check and
     // the POSIX rename (which overwrites), losing the first commit. On
@@ -242,15 +319,52 @@ object ManifestCommit {
     }
     publishStats(spark, path, next, txn, statCols)
     publishBloom(spark, path, next, txn, bloomCols, bloomBits)
-    publishHll(spark, path, next, txn, hllCols, hllLgK)
+    publishHll(spark, path, next, txn, hllCols)
     publishKmv(spark, path, next, txn, kmvCols, kmvK)
     next
   }
 
-  // ---- data skipping (Iceberg-style file-level min/max pruning) --------
+  /** Writes `lines` to a hidden tmp file under `_manifests/`: a crash
+    * mid-write leaves only a dot-file every reader ignores. */
+  private def writeTmp(fs: FileSystem, root: Path, lines: Seq[String]): Path = {
+    val tmp = new Path(new Path(root, ManifestDir),
+      s".tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, false)
+    try out.write(lines.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    tmp
+  }
 
-  private def statsPath(root: Path, v: Long) =
-    new Path(new Path(root, ManifestDir), f"$v%020d$StatsSuffix")
+  /** The one sidecar publish: tmp file, then rename WITHOUT overwrite to
+    * `_manifests/<version><suffix>`. Sidecars are derived, append-only
+    * metadata — a reader that finds no line for some file simply cannot
+    * use it for that file, so a crash between the manifest publish and
+    * this one (or a lost rename race) costs the shortcut, never
+    * correctness. Nothing is written for no lines. */
+  private def publishLines(spark: SparkSession, path: String, version: Long,
+      suffix: String, lines: Seq[String]): Unit = if (lines.nonEmpty) {
+    val root = new Path(path)
+    val fs = fsOf(spark, root)
+    val tmp = writeTmp(fs, root, lines)
+    val target = versionFile(root, version, suffix)
+    if (fs.exists(target) || !fs.rename(tmp, target)) fs.delete(tmp, false)
+  }
+
+  /** Every line of the `suffix` sidecars visible at `version`, split on
+    * tabs: the union of the retained sidecars at-or-below it. Each sidecar
+    * covers only its own commit's txn, so sidecar metadata accumulates
+    * incrementally — no commit ever re-reads old generations' files. */
+  private def sidecarLines(spark: SparkSession, path: String, suffix: String,
+      version: Long): Seq[Array[String]] = {
+    val root = new Path(path)
+    val fs = fsOf(spark, root)
+    manifestDirNames(fs, root).getOrElse(Nil)
+      .filter(n => n.endsWith(suffix) && n.stripSuffix(suffix).toLong <= version)
+      .flatMap(n => readText(fs, new Path(new Path(root, ManifestDir), n))
+        .split('\n').filter(_.nonEmpty).map(_.split('\t')))
+  }
+
+  // ---- data skipping (Iceberg-style file-level min/max pruning) --------
 
   /** One file's min/max for one column, read from the parquet FOOTER (no
     * data scan), plus the file's row count. Values carry a type tag
@@ -263,25 +377,16 @@ object ManifestCommit {
 
   private val RowsCol = "_rows"
 
-  /** Reads the parquet footers of every data file under `txnDir` and
+  /** Reads the parquet footers of every data file under the txn `dir` and
     * returns per-file min/max for `statCols`. Footer reads touch only
     * file metadata, never row data; at fleet scale run this inside the
     * writer task that just produced the file — here it is a driver loop
     * bounded by the files of ONE txn (the partitions the commit touched),
     * not the table. */
-  private def footerStats(spark: SparkSession, txnDir: Path, txn: String,
+  private def footerStats(spark: SparkSession, dir: Path, txn: String,
       statCols: Seq[String]): Seq[FileStat] = {
-    val fs = fsOf(spark, txnDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    def files(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) files(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-        else Nil
-      }
-    val qdir = fs.makeQualified(txnDir).toString
-    files(txnDir).flatMap { f =>
-      val rel = fs.makeQualified(f).toString.stripPrefix(qdir).stripPrefix("/")
+    parquetFiles(fsOf(spark, dir), dir).flatMap { case (rel, f) =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
       try {
@@ -342,54 +447,27 @@ object ManifestCommit {
     case 'S' => a.drop(2).compareTo(b.drop(2))
   }
 
+  private val TaggedOrder: Ordering[String] =
+    Ordering.fromLessThan((a, b) => cmpTagged(a, b) < 0)
+
+  private def statLine(s: FileStat): String =
+    s"${s.txn}\t${s.relFile}\t${s.column}\t${s.min}\t${s.max}\t${s.rows}"
+
   /** Publishes the stats sidecar for `snap`'s version: footer min/max per
     * (file, statCol) for the files of `txn` (the generation the commit
-    * just wrote). Sidecars are derived, append-only metadata — a reader
-    * that finds no sidecar for some file simply cannot prune it, so a
-    * crash between manifest publish and stats publish costs performance,
-    * never correctness. Same tmp+rename-without-overwrite publish as the
-    * manifest. */
-  def publishStats(spark: SparkSession, path: String, snap: Snapshot,
-      txn: String, statCols: Seq[String]): Unit = {
-    if (statCols.isEmpty) return
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val stats = footerStats(spark,
-      new Path(new Path(root, DataDir), txn), txn, statCols)
-    val tmp = new Path(new Path(root, ManifestDir),
-      s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(stats.sortBy(s => (s.relFile, s.column))
-      .map(s => s"${s.txn}\t${s.relFile}\t${s.column}\t${s.min}\t${s.max}\t${s.rows}")
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val target = statsPath(root, snap.version)
-    if (fs.exists(target) || !fs.rename(tmp, target)) fs.delete(tmp, false)
+    * just wrote). */
+  private def publishStats(spark: SparkSession, path: String, snap: Snapshot,
+      txn: String, statCols: Seq[String]): Unit = if (statCols.nonEmpty) {
+    val stats = footerStats(spark, txnDir(new Path(path), txn), txn, statCols)
+    publishLines(spark, path, snap.version, StatsSuffix,
+      stats.sortBy(s => (s.relFile, s.column)).map(statLine))
   }
 
-  /** All file stats visible at `version`: the union of the retained
-    * sidecars at-or-below it. Each sidecar covers only its own commit's
-    * txn, so stats accumulate incrementally — no commit ever re-reads old
-    * generations' footers. */
+  /** All file stats visible at `version`. */
   private def statsAt(spark: SparkSession, path: String,
-      version: Long): Seq[FileStat] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) Seq.empty
-    else fs.listStatus(mdir).map(_.getPath.getName).toSeq
-      .filter(n => n.endsWith(StatsSuffix) && !n.startsWith("."))
-      .filter(_.stripSuffix(StatsSuffix).toLong <= version)
-      .flatMap { n =>
-        val in = fs.open(new Path(mdir, n))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.split('\n').filter(_.nonEmpty).map { line =>
-          val f = line.split('\t')
-          FileStat(f(0), f(1), f(2), f(3), f(4), f(5).toLong)
-        }
-      }
-  }
+      version: Long): Seq[FileStat] =
+    sidecarLines(spark, path, StatsSuffix, version).map(f =>
+      FileStat(f(0), f(1), f(2), f(3), f(4), f(5).toLong))
 
   /** COUNT(*) of the current table answered from METADATA ALONE when the
     * sidecars cover every live file (per-file `_rows` lines, summed for
@@ -398,40 +476,15 @@ object ManifestCommit {
     * real distributed count when any live file lacks a sidecar line
     * (e.g. a commit made without statCols). */
   def countManifested(spark: SparkSession, path: String): Long = {
-    val snap = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val snap = requireSnapshot(spark, path)
     val rowLines = statsAt(spark, path, snap.version)
       .filter(_.column == RowsCol)
       .map(s => (s.txn, s.relFile) -> s.rows).toMap
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    var total = 0L
-    val complete = snap.entries.groupBy(_._2).forall { case (txn, es) =>
-      val base = new Path(new Path(root, DataDir), txn)
-      val qbase = fs.makeQualified(base).toString
-      def files(p: Path): Seq[Path] =
-        fs.listStatus(p).toSeq.flatMap { st =>
-          if (st.isDirectory) files(st.getPath)
-          else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-          else Nil
-        }
-      val live = es.keySet
-      files(base).filter { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-        val part = rel.lastIndexOf('/') match {
-          case -1 => ""
-          case i => rel.substring(0, i)
-        }
-        live.contains(part)
-      }.forall { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-        rowLines.get((txn, rel)) match {
-          case Some(r) => total += r; true
-          case None => false
-        }
-      }
-    }
-    if (complete) total else readManifested(spark, path).count()
+    coveredValues(spark, path, snap)((txn, rel) => rowLines.get((txn, rel)))
+      .map(_.sum)
+      // the fallback counts the version the coverage check saw, not
+      // whatever committed since
+      .getOrElse(readManifested(spark, path, Some(snap.version)).count())
   }
 
   /** MIN/MAX of `column` for the current table answered from METADATA
@@ -448,44 +501,14 @@ object ManifestCommit {
     * (Long/Double/String). */
   def minMaxManifested(spark: SparkSession, path: String,
       column: String): Option[(Any, Any)] = {
-    val snap = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val snap = requireSnapshot(spark, path)
     val stats = statsAt(spark, path, snap.version)
       .filter(_.column == column)
       .map(s => (s.txn, s.relFile) -> (s.min, s.max)).toMap
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    var lo: String = null
-    var hi: String = null
-    val complete = snap.entries.groupBy(_._2).forall { case (txn, es) =>
-      val base = new Path(new Path(root, DataDir), txn)
-      val qbase = fs.makeQualified(base).toString
-      def files(p: Path): Seq[Path] =
-        fs.listStatus(p).toSeq.flatMap { st =>
-          if (st.isDirectory) files(st.getPath)
-          else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-          else Nil
-        }
-      val live = es.keySet
-      files(base).filter { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-        val part = rel.lastIndexOf('/') match {
-          case -1 => ""
-          case i => rel.substring(0, i)
-        }
-        live.contains(part)
-      }.forall { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-        stats.get((txn, rel)) match {
-          case Some((mn, mx)) =>
-            if (lo == null || cmpTagged(mn, lo) < 0) lo = mn
-            if (hi == null || cmpTagged(mx, hi) > 0) hi = mx
-            true
-          case None => false
-        }
-      }
-    }
-    if (complete && lo != null) Some((untag(lo), untag(hi))) else None
+    coveredValues(spark, path, snap)((txn, rel) => stats.get((txn, rel)))
+      .filter(_.nonEmpty)
+      .map(ranges => (untag(ranges.map(_._1).min(TaggedOrder)),
+        untag(ranges.map(_._2).max(TaggedOrder))))
   }
 
   private def untag(s: String): Any = s.charAt(0) match {
@@ -505,15 +528,15 @@ object ManifestCommit {
     * the pruning. */
   def readManifestedPruned(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any): (DataFrame, Int, Int) = {
-    val snap = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val snap = requireSnapshot(spark, path)
     val (tlo, thi) = (tagged(lo), tagged(hi)) match {
       case (Some(a), Some(b)) => (a, b)
       case _ => throw new IllegalArgumentException(
         s"unprunable bound type/value: $lo .. $hi (pass Long/Double/control-free String)")
     }
+    val liveTxns = snap.entries.values.toSet
     val stats = statsAt(spark, path, snap.version)
-      .filter(s => s.column == column && snap.entries.values.exists(_ == s.txn))
+      .filter(s => s.column == column && liveTxns(s.txn))
       .map(s => (s.txn, s.relFile) -> (s.min, s.max)).toMap
     prunedScan(spark, path, snap) { (txn, rel) =>
       stats.get((txn, rel)) match {
@@ -532,48 +555,32 @@ object ManifestCommit {
   private def prunedScan(spark: SparkSession, path: String, snap: Snapshot)(
       keep: (String, String) => Boolean): (DataFrame, Int, Int) = {
     val root = new Path(path)
-    val fs = fsOf(spark, root)
-    var total = 0
-    var scanned = 0
-    val perTxn = snap.entries.groupBy(_._2).map { case (txn, es) =>
-      val base = new Path(new Path(root, DataDir), txn)
-      def files(p: Path): Seq[Path] =
-        fs.listStatus(p).toSeq.flatMap { st =>
-          if (st.isDirectory) files(st.getPath)
-          else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-          else Nil
-        }
-      val qbase = fs.makeQualified(base).toString
-      def relOf(f: Path) =
-        fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-      val inLiveParts = es.keySet
-      val all = files(base).filter { f =>
-        val rel = relOf(f)
-        val part = rel.lastIndexOf('/') match {
-          case -1 => ""
-          case i => rel.substring(0, i)
-        }
-        inLiveParts.contains(part)
-      }
-      total += all.size
-      val kept = all.filter(f => keep(txn, relOf(f)))
-      scanned += kept.size
-      (base, kept)
-    }.filter(_._2.nonEmpty)
+    val all = liveFiles(fsOf(spark, root), root, snap)
+    val kept = all.filter { case (txn, rel, _) => keep(txn, rel) }
     val df =
-      if (perTxn.isEmpty)
-        readManifested(spark, path).limit(0)
-      else perTxn.map { case (base, kept) =>
-        spark.read.option("basePath", base.toString)
-          .parquet(kept.map(_.toString): _*)
+      if (kept.isEmpty)
+        // the empty frame takes its schema from the version pruned, not
+        // from whatever committed since
+        readManifested(spark, path, Some(snap.version)).limit(0)
+      else kept.groupBy(_._1).map { case (txn, files) =>
+        spark.read.option("basePath", txnDir(root, txn).toString)
+          .parquet(files.map(_._3.toString): _*)
       }.reduce(_.unionByName(_, allowMissingColumns = true))
-    (df, scanned, total)
+    (df, kept.size, all.size)
   }
 
   // ---- Bloom-sidecar point-lookup skipping ----------------------------
 
-  private def bloomPath(root: Path, v: Long) =
-    new Path(new Path(root, ManifestDir), f"$v%020d$BloomSuffix")
+  /** The data of one txn generation, plus the map from an
+    * `input_file_name()` value to that file's path relative to the txn
+    * dir — what the scan-built sidecars key their lines by. */
+  private def txnData(spark: SparkSession, path: String,
+      txn: String): (DataFrame, String => String) = {
+    val dir = txnDir(new Path(path), txn)
+    val qdir = fsOf(spark, dir).makeQualified(dir).toString
+    (spark.read.parquet(dir.toString),
+      file => new Path(file).toString.stripPrefix(qdir).stripPrefix("/"))
+  }
 
   /** File-level BLOOM sidecar for equality lookups — the skip class
     * min/max zone maps cannot serve: when a high-cardinality column's
@@ -593,64 +600,36 @@ object ManifestCommit {
     * answers "might contain" for everything and prunes nothing — still
     * correct, just useless. The default (2^17 bits = 16 KiB of words per
     * file) holds ~10k keys/file at <1% FPR. */
-  def publishBloom(spark: SparkSession, path: String, snap: Snapshot,
-      txn: String, bloomCols: Seq[String], numBits: Int = 1 << 17,
-      numHashes: Int = 5): Unit = {
-    if (bloomCols.isEmpty) return
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val txnDir = new Path(new Path(root, DataDir), txn)
-    val qdir = fs.makeQualified(txnDir).toString
-    val data = spark.read.parquet(txnDir.toString)
-    val lines = bloomCols.flatMap { column =>
+  private def publishBloom(spark: SparkSession, path: String, snap: Snapshot,
+      txn: String, bloomCols: Seq[String], numBits: Int): Unit = if (bloomCols.nonEmpty) {
+    val (data, relOf) = txnData(spark, path, txn)
+    publishLines(spark, path, snap.version, BloomSuffix, bloomCols.flatMap { column =>
       graft.operators.Sketches
         .bloomWordsByFile(data.select(col(column)), col(column),
-          numBits, numHashes)
+          numBits, BloomHashes)
         .collect()
-        .groupBy(r => new Path(r.getString(0)).toString
-          .stripPrefix(qdir).stripPrefix("/"))
+        .groupBy(r => relOf(r.getString(0)))
         .toSeq.sortBy(_._1)
         .map { case (rel, rows) =>
           val words = rows.sortBy(_.getLong(1))
             .map(r => s"${r.getLong(1)}:${java.lang.Long.toHexString(r.getLong(2))}")
             .mkString(",")
-          s"$txn\t$rel\t$column\t$numBits\t$numHashes\t$words"
+          s"$txn\t$rel\t$column\t$numBits\t$BloomHashes\t$words"
         }
-    }
-    val tmp = new Path(new Path(root, ManifestDir),
-      s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val target = bloomPath(root, snap.version)
-    if (fs.exists(target) || !fs.rename(tmp, target)) fs.delete(tmp, false)
+    })
   }
 
   /** All Bloom sidecar lines visible at `version`:
     * (txn, relFile, column) -> (numBits, numHashes, sparse words). */
   private def bloomsAt(spark: SparkSession, path: String, version: Long)
-      : Map[(String, String, String), (Int, Int, Map[Long, Long])] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) Map.empty
-    else fs.listStatus(mdir).map(_.getPath.getName).toSeq
-      .filter(n => n.endsWith(BloomSuffix) && !n.startsWith("."))
-      .filter(_.stripSuffix(BloomSuffix).toLong <= version)
-      .flatMap { n =>
-        val in = fs.open(new Path(mdir, n))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.split('\n').filter(_.nonEmpty).map { line =>
-          val f = line.split('\t')
-          val words = f(5).split(',').filter(_.nonEmpty).map { iw =>
-            val Array(i, w) = iw.split(':')
-            i.toLong -> java.lang.Long.parseUnsignedLong(w, 16)
-          }.toMap
-          (f(0), f(1), f(2)) -> ((f(3).toInt, f(4).toInt, words))
-        }
+      : Map[(String, String, String), (Int, Int, Map[Long, Long])] =
+    sidecarLines(spark, path, BloomSuffix, version).map { f =>
+      val words = f(5).split(',').filter(_.nonEmpty).map { iw =>
+        val Array(i, w) = iw.split(':')
+        i.toLong -> java.lang.Long.parseUnsignedLong(w, 16)
       }.toMap
-  }
+      (f(0), f(1), f(2)) -> ((f(3).toInt, f(4).toInt, words))
+    }.toMap
 
   /** Reads the current table with FILE-LEVEL skipping on
     * `column IN (values)`: a file is opened only when its Bloom filter
@@ -665,12 +644,10 @@ object ManifestCommit {
   def readManifestedBloomPruned(spark: SparkSession, path: String,
       column: String, values: Seq[Any]): (DataFrame, Int, Int) = {
     require(values.nonEmpty, "pass at least one probe value")
-    val snap = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val snap = requireSnapshot(spark, path)
+    val liveTxns = snap.entries.values.toSet
     val blooms = bloomsAt(spark, path, snap.version)
-      .filter { case ((txn, _, c), _) =>
-        c == column && snap.entries.values.exists(_ == txn)
-      }
+      .filter { case ((txn, _, c), _) => c == column && liveTxns(txn) }
     // probe positions per (m, k) family actually present — one tiny
     // local evaluation per family per value, never per file
     val posCache = scala.collection.mutable.Map.empty[(Int, Int), Seq[Seq[Long]]]
@@ -689,9 +666,6 @@ object ManifestCommit {
 
   // ---- HLL distinct-count sidecars (metadata-only APPROX COUNT DISTINCT) --
 
-  private def hllPath(root: Path, v: Long) =
-    new Path(new Path(root, ManifestDir), f"$v%020d$HllSuffix")
-
   /** File-level HLL sketch sidecar — the third aggregate the metadata
     * tier can serve: COUNT(*) rides `_rows`, MIN/MAX ride footer stats,
     * and DISTINCT counts ride per-file HyperLogLog sketches
@@ -706,59 +680,31 @@ object ManifestCommit {
     * bytes); same tmp+rename publish, same derived-metadata contract as
     * `.stats`/`.bloom`: a lost sidecar costs the metadata shortcut,
     * never correctness. */
-  def publishHll(spark: SparkSession, path: String, snap: Snapshot,
-      txn: String, hllCols: Seq[String], lgK: Int = 12): Unit = {
-    if (hllCols.isEmpty) return
-    require(lgK >= 4 && lgK <= 21, s"lgK=$lgK outside DataSketches range")
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val txnDir = new Path(new Path(root, DataDir), txn)
-    val qdir = fs.makeQualified(txnDir).toString
-    val data = spark.read.parquet(txnDir.toString)
-    val lines = hllCols.flatMap { column =>
+  private def publishHll(spark: SparkSession, path: String, snap: Snapshot,
+      txn: String, hllCols: Seq[String]): Unit = if (hllCols.nonEmpty) {
+    val (data, relOf) = txnData(spark, path, txn)
+    publishLines(spark, path, snap.version, HllSuffix, hllCols.flatMap { column =>
       data.select(input_file_name().as("file"), col(column))
         .groupBy(col("file"))
-        .agg(hll_sketch_agg(col(column), lit(lgK)).as("sk"))
+        .agg(hll_sketch_agg(col(column), lit(HllLgK)).as("sk"))
         .collect()
         .map { r =>
-          val rel = new Path(r.getString(0)).toString
-            .stripPrefix(qdir).stripPrefix("/")
+          val rel = relOf(r.getString(0))
           val b64 = java.util.Base64.getEncoder
             .encodeToString(r.getAs[Array[Byte]]("sk"))
-          (rel, s"$txn\t$rel\t$column\t$lgK\t$b64")
+          (rel, s"$txn\t$rel\t$column\t$HllLgK\t$b64")
         }.sortBy(_._1).map(_._2)
-    }
-    val tmp = new Path(new Path(root, ManifestDir),
-      s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val target = hllPath(root, snap.version)
-    if (fs.exists(target) || !fs.rename(tmp, target)) fs.delete(tmp, false)
+    })
   }
 
   /** All HLL sidecar lines visible at `version`:
     * (txn, relFile, column) -> (lgK, serialized sketch). */
   private def hllsAt(spark: SparkSession, path: String, version: Long)
-      : Map[(String, String, String), (Int, Array[Byte])] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) Map.empty
-    else fs.listStatus(mdir).map(_.getPath.getName).toSeq
-      .filter(n => n.endsWith(HllSuffix) && !n.startsWith("."))
-      .filter(_.stripSuffix(HllSuffix).toLong <= version)
-      .flatMap { n =>
-        val in = fs.open(new Path(mdir, n))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.split('\n').filter(_.nonEmpty).map { line =>
-          val f = line.split('\t')
-          (f(0), f(1), f(2)) ->
-            ((f(3).toInt, java.util.Base64.getDecoder.decode(f(4))))
-        }
-      }.toMap
-  }
+      : Map[(String, String, String), (Int, Array[Byte])] =
+    sidecarLines(spark, path, HllSuffix, version).map { f =>
+      (f(0), f(1), f(2)) ->
+        ((f(3).toInt, java.util.Base64.getDecoder.decode(f(4))))
+    }.toMap
 
   /** APPROX COUNT DISTINCT of `column` for the current table from
     * METADATA ALONE: when every live file carries an HLL sidecar line
@@ -783,42 +729,13 @@ object ManifestCommit {
     * aggregation instead. */
   def distinctManifested(spark: SparkSession, path: String,
       column: String): Option[Long] = {
-    val snap = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val snap = requireSnapshot(spark, path)
     val hlls = hllsAt(spark, path, snap.version)
       .filter(_._1._3 == column)
       .map { case ((txn, rel, _), v) => (txn, rel) -> v }
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val sketches = scala.collection.mutable
-      .ArrayBuffer.empty[(String, Int, Array[Byte])]
-    val complete = snap.entries.groupBy(_._2).forall { case (txn, es) =>
-      val base = new Path(new Path(root, DataDir), txn)
-      val qbase = fs.makeQualified(base).toString
-      def files(p: Path): Seq[Path] =
-        fs.listStatus(p).toSeq.flatMap { st =>
-          if (st.isDirectory) files(st.getPath)
-          else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-          else Nil
-        }
-      val live = es.keySet
-      files(base).filter { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-        val part = rel.lastIndexOf('/') match {
-          case -1 => ""
-          case i => rel.substring(0, i)
-        }
-        live.contains(part)
-      }.forall { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-        hlls.get((txn, rel)) match {
-          case Some((lg, b)) => sketches += ((s"$txn/$rel", lg, b)); true
-          case None => false
-        }
-      }
-    }
-    if (!complete || sketches.isEmpty) None
-    else {
+    coveredValues(spark, path, snap) { (txn, rel) =>
+      hlls.get((txn, rel)).map { case (lg, b) => (s"$txn/$rel", lg, b) }
+    }.filter(_.nonEmpty).map { sketches =>
       val lg = sketches.map(_._2).min // mixed lgK unions downgrade safely
       val u = new org.apache.datasketches.hll.Union(lg)
       // sorted fold: the HIP estimator is merge-order-dependent, so a
@@ -826,15 +743,12 @@ object ManifestCommit {
       sketches.sortBy(_._1).foreach { case (_, _, b) =>
         u.update(org.apache.datasketches.hll.HllSketch.heapify(b))
       }
-      Some(Math.round(u.getResult(
-        org.apache.datasketches.hll.TgtHllType.HLL_8).getEstimate))
+      Math.round(u.getResult(
+        org.apache.datasketches.hll.TgtHllType.HLL_8).getEstimate)
     }
   }
 
   // ---- KMV bottom-k sidecars (deterministic distinct + join overlap) ----
-
-  private def kmvPath(root: Path, v: Long) =
-    new Path(new Path(root, ManifestDir), f"$v%020d$KmvSuffix")
 
   /** File-level KMV (k-minimum-values, Bar-Yossef 2002) sidecar over the
     * engine-portable 60-bit md5 hash — the DETERMINISTIC sketch tier:
@@ -849,16 +763,11 @@ object ManifestCommit {
     * JOIN KEY OVERLAP between two tables from their sidecars alone (the
     * broadcast-vs-shuffle planning input at fleet scale). One
     * column-pruned pass per commit txn; per-file payload k longs. */
-  def publishKmv(spark: SparkSession, path: String, snap: Snapshot,
-      txn: String, kmvCols: Seq[String], k: Int = 256): Unit = {
-    if (kmvCols.isEmpty) return
+  private def publishKmv(spark: SparkSession, path: String, snap: Snapshot,
+      txn: String, kmvCols: Seq[String], k: Int): Unit = if (kmvCols.nonEmpty) {
     require(k > 1, s"k must exceed 1: $k")
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val txnDir = new Path(new Path(root, DataDir), txn)
-    val qdir = fs.makeQualified(txnDir).toString
-    val data = spark.read.parquet(txnDir.toString)
-    val lines = kmvCols.flatMap { column =>
+    val (data, relOf) = txnData(spark, path, txn)
+    publishLines(spark, path, snap.version, KmvSuffix, kmvCols.flatMap { column =>
       // bottom-k DISTINCT hashes per file: rank-limit pushdown keeps the
       // per-task state k rows per file (partial WindowGroupLimit)
       val w = Window.partitionBy("file").orderBy("h")
@@ -872,45 +781,23 @@ object ManifestCommit {
         .agg(sort_array(collect_list(col("h"))).as("hs"))
         .collect()
         .map { r =>
-          val rel = new Path(r.getString(0)).toString
-            .stripPrefix(qdir).stripPrefix("/")
+          val rel = relOf(r.getString(0))
           val hs = r.getSeq[Long](1)
             .map(java.lang.Long.toHexString).mkString(",")
           (rel, s"$txn\t$rel\t$column\t$k\t$hs")
         }.sortBy(_._1).map(_._2)
-    }
-    val tmp = new Path(new Path(root, ManifestDir),
-      s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val target = kmvPath(root, snap.version)
-    if (fs.exists(target) || !fs.rename(tmp, target)) fs.delete(tmp, false)
+    })
   }
 
   /** All KMV sidecar lines visible at `version`:
     * (txn, relFile, column) -> (k, sorted bottom-k hashes). */
   private def kmvsAt(spark: SparkSession, path: String, version: Long)
-      : Map[(String, String, String), (Int, Array[Long])] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val mdir = new Path(root, ManifestDir)
-    if (!fs.exists(mdir)) Map.empty
-    else fs.listStatus(mdir).map(_.getPath.getName).toSeq
-      .filter(n => n.endsWith(KmvSuffix) && !n.startsWith("."))
-      .filter(_.stripSuffix(KmvSuffix).toLong <= version)
-      .flatMap { n =>
-        val in = fs.open(new Path(mdir, n))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.split('\n').filter(_.nonEmpty).map { line =>
-          val f = line.split('\t')
-          val hs = if (f.length < 5 || f(4).isEmpty) Array.empty[Long]
-            else f(4).split(',').map(java.lang.Long.parseUnsignedLong(_, 16))
-          (f(0), f(1), f(2)) -> ((f(3).toInt, hs))
-        }
-      }.toMap
-  }
+      : Map[(String, String, String), (Int, Array[Long])] =
+    sidecarLines(spark, path, KmvSuffix, version).map { f =>
+      val hs = if (f.length < 5 || f(4).isEmpty) Array.empty[Long]
+        else f(4).split(',').map(java.lang.Long.parseUnsignedLong(_, 16))
+      (f(0), f(1), f(2)) -> ((f(3).toInt, hs))
+    }.toMap
 
   /** The merged bottom-k sketch of `column` over the current table's
     * live files, from sidecars alone: (k, sorted bottom-k distinct
@@ -919,47 +806,18 @@ object ManifestCommit {
     * lines. */
   def kmvSketchManifested(spark: SparkSession, path: String,
       column: String): Option[(Int, Array[Long])] = {
-    val snap = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val snap = requireSnapshot(spark, path)
     val kmvs = kmvsAt(spark, path, snap.version)
       .filter(_._1._3 == column)
       .map { case ((txn, rel, _), v) => (txn, rel) -> v }
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Long])]
-    val complete = snap.entries.groupBy(_._2).forall { case (txn, es) =>
-      val base = new Path(new Path(root, DataDir), txn)
-      val qbase = fs.makeQualified(base).toString
-      def files(p: Path): Seq[Path] =
-        fs.listStatus(p).toSeq.flatMap { st =>
-          if (st.isDirectory) files(st.getPath)
-          else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-          else Nil
-        }
-      val live = es.keySet
-      files(base).filter { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-        val part = rel.lastIndexOf('/') match {
-          case -1 => ""
-          case i => rel.substring(0, i)
-        }
-        live.contains(part)
-      }.forall { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(qbase).stripPrefix("/")
-        kmvs.get((txn, rel)) match {
-          case Some(v) => parts += v; true
-          case None => false
-        }
+    coveredValues(spark, path, snap)((txn, rel) => kmvs.get((txn, rel)))
+      .filter(parts => parts.nonEmpty && parts.map(_._1).distinct.size == 1)
+      .map { parts =>
+        val k = parts.head._1
+        // bottom-k of the union == bottom-k of the concatenated bottom-k's:
+        // exact, order-independent, idempotent
+        (k, parts.flatMap(_._2).distinct.sorted.take(k).toArray)
       }
-    }
-    if (!complete || parts.isEmpty) None
-    else if (parts.map(_._1).distinct.size != 1) None
-    else {
-      val k = parts.head._1
-      // bottom-k of the union == bottom-k of the concatenated bottom-k's:
-      // exact, order-independent, idempotent
-      Some((k, parts.flatMap(_._2).distinct.sorted.take(k).toArray))
-    }
   }
 
   private val HashDomain = 1152921504606846976.0 // 2^60
@@ -1009,23 +867,34 @@ object ManifestCommit {
     }
   }
 
-  /** Keyed upsert with [[TableWriters.upsertParquet]] semantics
-    * (last-writer-wins, touched-partitions-only cost) committed through
-    * the manifest instead of directory swaps. Accepts schema-EVOLVED
-    * updates: a new column in `updates` null-fills the carried-over rows
-    * of the touched partitions and becomes part of the table schema from
-    * this version on (untouched older txns read as null through
-    * [[readManifested]]). */
+  /** Keyed upsert (MERGE-by-key) committed as one new manifest version:
+    * update rows replace table rows with the same key, new keys append —
+    * the reference's last-writer-wins merge semantics (validator.py:96-98)
+    * promoted to a table primitive.
+    *
+    * CONTRACT: a key's partition values must be STABLE (partition columns
+    * a function of the key). Only partitions present in the updates are
+    * read and rewritten, so an update that moves a key to a different
+    * partition would leave the old row in the untouched partition — the
+    * same caveat every partition-pruned MERGE has. Updates should be
+    * key-unique; duplicate update keys pick a deterministic winner (the
+    * smallest row by `struct(dataCols)`), so replays converge.
+    *
+    * SCALE: cost is proportional to the TOUCHED partitions, never the
+    * table (broadcast semi-join on the partition values; only those
+    * partitions are written to the new txn, the rest stay on their old
+    * txns). Accepts schema-EVOLVED updates: a new column in `updates`
+    * null-fills the carried-over rows of the touched partitions and
+    * becomes part of the table schema from this version on (untouched
+    * older txns read as null through [[readManifested]]). */
   def upsertManifested(spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], partitionCols: Seq[String],
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomBits: Int = 1 << 17, hllCols: Seq[String] = Nil,
-      hllLgK: Int = 12, kmvCols: Seq[String] = Nil,
-      kmvK: Int = 256): Snapshot = {
+      kmvCols: Seq[String] = Nil, kmvK: Int = 256): Snapshot = {
     // pin the version the merge reads: a commit interleaving with the
     // rewrite must fail the publish, not lose its touched partitions
-    val base = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val base = requireSnapshot(spark, path)
     val target = readManifested(spark, path, Some(base.version))
     val touchedParts = updates.select(partitionCols.map(col): _*).distinct()
     val affected = target.join(broadcast(touchedParts), partitionCols, "left_semi")
@@ -1045,10 +914,10 @@ object ManifestCommit {
     overwriteViaManifest(spark, path, partitionCols, statCols = statCols,
       bloomCols = bloomCols, bloomBits = bloomBits,
       baseVersion = Some(base.version), hllCols = hllCols,
-      hllLgK = hllLgK, kmvCols = kmvCols, kmvK = kmvK) { txnDir =>
+      kmvCols = kmvCols, kmvK = kmvK) { txn =>
       merged.write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*)
-        .parquet(txnDir)
+        .parquet(txn)
     }
   }
 
@@ -1065,19 +934,16 @@ object ManifestCommit {
       partitionCols: Seq[String], maxRecordsPerFile: Long = 5000000L,
       statCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomBits: Int = 1 << 17, hllCols: Seq[String] = Nil,
-      hllLgK: Int = 12, kmvCols: Seq[String] = Nil,
-      kmvK: Int = 256): Snapshot = {
+      kmvCols: Seq[String] = Nil, kmvK: Int = 256): Snapshot = {
     // pin the compacted version: replaceAll over a stale read would
     // silently drop any commit that interleaved with the rewrite
-    val base = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
+    val base = requireSnapshot(spark, path)
     val current = readManifested(spark, path, Some(base.version))
       .repartition(partitionCols.map(col): _*)
     overwriteViaManifest(spark, path, partitionCols, replaceAll = true,
         statCols = statCols, bloomCols = bloomCols,
         bloomBits = bloomBits, baseVersion = Some(base.version),
-        hllCols = hllCols, hllLgK = hllLgK, kmvCols = kmvCols,
-        kmvK = kmvK) { txn =>
+        hllCols = hllCols, kmvCols = kmvCols, kmvK = kmvK) { txn =>
       current.write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", maxRecordsPerFile)
         .partitionBy(partitionCols: _*)
@@ -1120,36 +986,22 @@ object ManifestCommit {
       maxRowsPerFile: Long = 50000000L): Snapshot = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    val before = currentSnapshot(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"no manifest at $path"))
-    // old sidecar lines, filtered to LIVE files (their txn still owns
-    // their partition in the current manifest)
-    def partOf(rel: String): String = {
-      val i = rel.lastIndexOf('/')
-      if (i < 0) "" else rel.substring(0, i)
-    }
-    def live(txn: String, rel: String): Boolean =
-      before.entries.get(partOf(rel)).contains(txn)
-    val oldStats = statsAt(spark, path, before.version)
-      .filter(s => live(s.txn, s.relFile))
-    val oldBlooms = bloomsAt(spark, path, before.version)
-      .filter { case ((txn, rel, _), _) => live(txn, rel) }
-    val oldHlls = hllsAt(spark, path, before.version)
-      .filter { case ((txn, rel, _), _) => live(txn, rel) }
-    val oldKmvs = kmvsAt(spark, path, before.version)
-      .filter { case ((txn, rel, _), _) => live(txn, rel) }
+    val before = requireSnapshot(spark, path)
     // per-partition OLD file inventory (fs listing only — no reads):
     // completeness gate for the folds
-    val oldFilesByPart: Map[String, Seq[String]] = before.entries.toSeq
-      .flatMap { case (rel, txn) =>
-        val dir = if (rel.isEmpty) new Path(new Path(root, DataDir), txn)
-          else new Path(new Path(new Path(root, DataDir), txn), rel)
-        if (!fs.exists(dir)) Nil
-        else fs.listStatus(dir).toSeq
-          .filter(st => !st.isDirectory && st.getPath.getName.endsWith(".parquet"))
-          .map(st => rel -> (if (rel.isEmpty) st.getPath.getName
-            else s"$rel/${st.getPath.getName}"))
-      }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val oldFiles = liveFiles(fs, root, before).map { case (txn, rel, _) => (txn, rel) }
+    val oldFilesByPart: Map[String, Seq[String]] = oldFiles.map(_._2).groupBy(partOf)
+    // old sidecar lines, filtered to LIVE files (their txn still owns
+    // their partition in the current manifest)
+    val live = oldFiles.toSet
+    val oldStats = statsAt(spark, path, before.version)
+      .filter(s => live((s.txn, s.relFile)))
+    val oldBlooms = bloomsAt(spark, path, before.version)
+      .filter { case ((txn, rel, _), _) => live((txn, rel)) }
+    val oldHlls = hllsAt(spark, path, before.version)
+      .filter { case ((txn, rel, _), _) => live((txn, rel)) }
+    val oldKmvs = kmvsAt(spark, path, before.version)
+      .filter { case ((txn, rel, _), _) => live((txn, rel)) }
     // ONE file per partition below the cap: shuffle on the partition
     // columns, then the single write task per key emits one file; a
     // partition past maxRowsPerFile splits (the hot-partition guard)
@@ -1167,17 +1019,9 @@ object ManifestCommit {
     }
     // the new generation: exactly one txn, one file per partition
     val newTxn = next.entries.values.headOption.getOrElse(return next)
-    val newTxnDir = new Path(new Path(root, DataDir), newTxn)
-    val qdir = fs.makeQualified(newTxnDir).toString
-    def filesUnder(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) filesUnder(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-        else Nil
-      }
-    val newFilesByPart: Map[String, Seq[String]] = filesUnder(newTxnDir)
-      .map(f => fs.makeQualified(f).toString.stripPrefix(qdir).stripPrefix("/"))
-      .groupBy(partOf)
+    val newTxnDir = txnDir(root, newTxn)
+    val newFilesByPart: Map[String, Seq[String]] = liveFiles(fs, root, next)
+      .map(_._2).groupBy(partOf)
     val conf = spark.sparkContext.hadoopConfiguration
     // exact per-file row count from the parquet FOOTER alone — only ever
     // called for the files of a partition the row cap split
@@ -1218,10 +1062,8 @@ object ManifestCommit {
         // the 1:1 case, conservative-but-correct for a split one
         byCol.filter(_._1 != RowsCol).foreach { case (c, ls) =>
           if (ls.map(_.relFile).toSet == olds.toSet) {
-            val lo = ls.map(_.min).min(Ordering.fromLessThan[String](
-              (a, b) => cmpTagged(a, b) < 0))
-            val hi = ls.map(_.max).max(Ordering.fromLessThan[String](
-              (a, b) => cmpTagged(a, b) < 0))
+            val lo = ls.map(_.min).min(TaggedOrder)
+            val hi = ls.map(_.max).max(TaggedOrder)
             newFiles.foreach(nf =>
               statLines += FileStat(newTxn, nf, c, lo, hi, 0L))
           }
@@ -1277,23 +1119,11 @@ object ManifestCommit {
         }
       }
     }
-    // same tmp + rename-without-overwrite publish as the built sidecars
-    def publishLines(target: Path, lines: Seq[String]): Unit = {
-      if (lines.isEmpty) return
-      val tmp = new Path(new Path(root, ManifestDir),
-        s".tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, false)
-      try out.write(lines.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      if (fs.exists(target) || !fs.rename(tmp, target)) fs.delete(tmp, false)
-    }
-    publishLines(statsPath(root, next.version),
-      statLines.sortBy(s => (s.relFile, s.column))
-        .map(s => s"${s.txn}\t${s.relFile}\t${s.column}\t${s.min}\t${s.max}\t${s.rows}")
-        .toSeq)
-    publishLines(bloomPath(root, next.version), bloomLines.toSeq)
-    publishLines(hllPath(root, next.version), hllLines.toSeq)
-    publishLines(kmvPath(root, next.version), kmvLines.toSeq)
+    publishLines(spark, path, next.version, StatsSuffix,
+      statLines.toSeq.sortBy(s => (s.relFile, s.column)).map(statLine))
+    publishLines(spark, path, next.version, BloomSuffix, bloomLines.toSeq)
+    publishLines(spark, path, next.version, HllSuffix, hllLines.toSeq)
+    publishLines(spark, path, next.version, KmvSuffix, kmvLines.toSeq)
     next
   }
 
@@ -1310,63 +1140,51 @@ object ManifestCommit {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val mdir = new Path(root, ManifestDir)
-    val (retained: Seq[Long], retired: Seq[Long]) =
-      if (!fs.exists(mdir)) (Seq.empty, Seq.empty)
-      else {
-        val versions = fs.listStatus(mdir).map(_.getPath.getName)
-          .filter(n => n.endsWith(ManifestSuffix) && !n.startsWith("."))
-          .map(_.stripSuffix(ManifestSuffix).toLong).sorted.toSeq
-        (versions.takeRight(keepManifests), versions.dropRight(keepManifests))
-      }
+    val names = manifestDirNames(fs, root).getOrElse(Nil)
+    val versions = names.filter(_.endsWith(ManifestSuffix))
+      .map(_.stripSuffix(ManifestSuffix).toLong).sorted
+    val (retained, retired) =
+      (versions.takeRight(keepManifests), versions.dropRight(keepManifests))
     val live: Set[String] = retained
       .flatMap(v => snapshotAt(spark, path, Some(v)).map(_.entries.values.toSet)
         .getOrElse(Set.empty))
       .toSet
-    retired.foreach(v => fs.delete(manifestPath(root, v), false))
+    retired.foreach(v => fs.delete(versionFile(root, v, ManifestSuffix), false))
     // a non-retained version's SIDECAR may still cover files of a txn a
     // RETAINED manifest references (sidecars accumulate incrementally —
     // each covers only its own commit's txn): deleting it would lose
     // file skipping for live files. Retire a sidecar only once every txn
     // it covers is dead; until then it stays readable via the
-    // <= version filter of statsAt/bloomsAt. The sweep runs over ALL
+    // <= version filter of sidecarLines. The sweep runs over ALL
     // sidecar files below the retention horizon — a sidecar kept in an
     // earlier vacuum (manifest long gone) still retires here the moment
-    // its txns die. (Previously stats were dropped unconditionally,
-    // losing live-file skipping, and the bloom file leaked forever.)
+    // its txns die.
     // The sweep considers only versions STRICTLY BELOW the newest
     // retained manifest: a sidecar published by a commit that lands
-    // between our manifest listing and this sweep has v > horizon (its
-    // manifest wasn't listed, its txn isn't in `live`) and must not be
-    // deleted just after publication — above the horizon nothing is
-    // retired, matching the retention contract.
-    if (fs.exists(mdir)) {
-      val retainedSet = retained.toSet
-      val horizon = retained.lastOption.getOrElse(Long.MinValue)
-      fs.listStatus(mdir).map(_.getPath.getName)
-        .filter(n => !n.startsWith(".") &&
-          (n.endsWith(StatsSuffix) || n.endsWith(BloomSuffix) ||
-            n.endsWith(HllSuffix) || n.endsWith(KmvSuffix)))
-        .foreach { n =>
-          val v = n.stripSuffix(StatsSuffix).stripSuffix(BloomSuffix)
-            .stripSuffix(HllSuffix).stripSuffix(KmvSuffix).toLong
-          if (v < horizon && !retainedSet.contains(v)) {
-            val p = new Path(mdir, n)
-            val in = fs.open(p)
-            // a malformed line (no tab — truncated write, corruption)
-            // maps to None and KEEPS the file: never delete metadata the
-            // sweep cannot fully account for
-            val txns = try scala.io.Source.fromInputStream(in, "UTF-8")
-              .getLines().filter(_.nonEmpty)
-              .map { l =>
-                val i = l.indexOf('\t')
-                if (i < 0) None else Some(l.substring(0, i))
-              }.toSet
-              finally in.close()
-            val deletable = !txns.contains(None) &&
-              txns.flatten.forall(!live.contains(_))
-            if (deletable) fs.delete(p, false)
-          }
-        }
+    // after the listing above has v > horizon (its manifest wasn't
+    // listed, its txn isn't in `live`) and must not be deleted just after
+    // publication — above the horizon nothing is retired, matching the
+    // retention contract.
+    val retainedSet = retained.toSet
+    val horizon = retained.lastOption.getOrElse(Long.MinValue)
+    for {
+      n <- names
+      suffix <- SidecarSuffixes.find(n.endsWith)
+      v = n.stripSuffix(suffix).toLong
+      if v < horizon && !retainedSet.contains(v)
+    } {
+      val p = new Path(mdir, n)
+      // a malformed line (no tab — truncated write, corruption) maps to
+      // None and KEEPS the file: never delete metadata the sweep cannot
+      // fully account for
+      val txns = readText(fs, p).split('\n').filter(_.nonEmpty)
+        .map { l =>
+          val i = l.indexOf('\t')
+          if (i < 0) None else Some(l.substring(0, i))
+        }.toSet
+      val deletable = !txns.contains(None) &&
+        txns.flatten.forall(!live.contains(_))
+      if (deletable) fs.delete(p, false)
     }
     val cutoff = System.currentTimeMillis() - minAgeMs
     val ddir = new Path(root, DataDir)

@@ -1,8 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Sink layer (SURVEY §2.2 K1-K3 widened to the formats a lakehouse needs).
   *
@@ -12,6 +10,11 @@ import org.apache.spark.sql.functions._
   * overwrite keeps re-runs incremental (only touched partitions rewrite).
   * CSV/JSON are interchange formats: fine for exports, never for the hot
   * path (no pushdown, no column pruning, full-row parse).
+  *
+  * These are one-shot sinks with no commit protocol of their own. A table
+  * that is upserted, compacted or read while it is being written is
+  * committed through [[ManifestCommit]], the only commit protocol for
+  * partitioned tables.
   */
 object TableWriters {
 
@@ -35,210 +38,6 @@ object TableWriters {
     * path), so ORC inputs can sit on the hot path, unlike CSV/JSON. */
   def orc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
-
-  /** Prefix + layout of the per-partition "aside" directories the swap
-    * protocol uses: `.graft-old-<36-char-uuid>-<leafName>`, created in the
-    * leaf's parent. The uuid is the transaction id of the swap that created
-    * it; the leaf name after the fixed-width uuid lets recovery map an
-    * aside back to the partition it shadows without any manifest. */
-  private val AsidePrefix = ".graft-old-"
-  private val UuidLen = 36
-
-  /** How stale an orphan staging directory must be before the pre-write
-    * sweep garbage-collects it. Correctness never depends on sweeping
-    * (orphan staging is dead weight, not shared state); the age gate exists
-    * so a sweep can never delete a LIVE staging dir if the single-writer
-    * contract is violated by a slow concurrent writer. */
-  val StagingSweepAgeMs: Long = 24L * 3600 * 1000
-
-  /** Heals a partitioned table after a crashed swap and garbage-collects
-    * stale staging leftovers. Safe (and cheap) to call any time; called
-    * automatically by [[upsertParquet]] and [[compactParquet]] BEFORE they
-    * read the target, so a crashed predecessor's interrupted swap is rolled
-    * back before the merge plan lists files.
-    *
-    * Recovery per aside dir found in the partition tree (or next to the
-    * target root): if the partition it shadows is MISSING the crash hit
-    * between aside-rename and swap-in — rename the aside back (complete old
-    * state restored); if the partition exists the crash hit after swap-in —
-    * the aside is a fully-superseded copy, delete it. Either way every
-    * partition ends complete-old or complete-new, never absent.
-    *
-    * CONCURRENCY: assumes a single writer per table path (the same contract
-    * every non-transactional table layout has). The staging sweep is
-    * age-gated ([[StagingSweepAgeMs]]) as defense in depth so two writers
-    * racing on one path cannot delete each other's in-flight staging. */
-  def recoverPartitionedTable(spark: SparkSession, path: String,
-      partitionCols: Seq[String],
-      stagingMaxAgeMs: Long = StagingSweepAgeMs): Unit = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def healAsides(dir: Path, onlyLeaf: Option[String]): Unit =
-      if (fs.exists(dir))
-        fs.listStatus(dir)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(AsidePrefix))
-          .foreach { st =>
-            val leaf = st.getPath.getName.substring(AsidePrefix.length + UuidLen + 1)
-            if (onlyLeaf.forall(_ == leaf)) {
-              val dst = new Path(dir, leaf)
-              if (fs.exists(dst)) fs.delete(st.getPath, true)
-              else if (!fs.rename(st.getPath, dst))
-                throw new java.io.IOException(
-                  s"recovery failed: ${st.getPath} -> $dst")
-            }
-          }
-    // root-level aside (unpartitioned swap of the whole table dir); scoped
-    // to THIS table's name — sibling tables in the same parent are not ours
-    healAsides(target.getParent, Some(target.getName))
-    // asides inside the partition tree: a leaf at depth d leaves its aside
-    // in its parent at depth d-1
-    def walk(p: Path, depth: Int): Unit = if (depth > 0 && fs.exists(p)) {
-      healAsides(p, None)
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.contains("="))
-        .foreach(c => walk(c, depth - 1))
-    }
-    walk(target, partitionCols.length)
-    // age-gated sweep of orphan staging dirs from crashed predecessors
-    val prefix = s".${target.getName}.staging-"
-    val cutoff = System.currentTimeMillis() - stagingMaxAgeMs
-    if (fs.exists(target.getParent))
-      fs.listStatus(target.getParent)
-        .filter(st => st.getPath.getName.startsWith(prefix) &&
-          st.getModificationTime < cutoff)
-        .foreach(st => fs.delete(st.getPath, true))
-  }
-
-  /** Writes a partitioned result to a STAGING directory next to `path`,
-    * then swaps each staged leaf partition directory into the target with
-    * a rename-aside protocol: the OLD partition is renamed aside first,
-    * the staged replacement renamed in, and the aside deleted only after
-    * the swap-in succeeded. No committed data is ever deleted before its
-    * replacement is durably in place, so a crash at ANY point leaves every
-    * partition complete (old or new): before the swap the target is
-    * untouched; between aside and swap-in the old copy survives under its
-    * aside name and [[recoverPartitionedTable]] restores it; after swap-in
-    * the aside is a superseded copy recovery deletes. Directory rename is
-    * atomic on HDFS/POSIX filesystems — on object stores without atomic
-    * rename use [[ManifestCommit]], whose commit is a single
-    * create-if-absent manifest file and which never renames a directory
-    * (see DESIGN.md "Durable commit"). Writing to a path DIFFERENT from
-    * the one being read also removes the need to checkpoint the plan that
-    * reads the target. Single writer per table path assumed. */
-  private def overwriteViaStaging(spark: SparkSession, path: String,
-      partitionCols: Seq[String],
-      stagingMaxAgeMs: Long = StagingSweepAgeMs)(writeTo: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverPartitionedTable(spark, path, partitionCols, stagingMaxAgeMs)
-    val txnId = java.util.UUID.randomUUID().toString
-    val staging = new Path(target.getParent, s".${target.getName}.staging-$txnId")
-    writeTo(staging.toString)
-    try {
-      // (path, relative-partition-path) pairs; the relative path is built
-      // from directory NAMES, never by string-stripping absolute paths
-      // (listStatus returns scheme-qualified paths that would not prefix-
-      // match an unqualified staging path)
-      def leaves(p: Path, depth: Int, rel: String): Seq[(Path, String)] =
-        if (depth == 0) Seq((p, rel))
-        else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
-          .filter(_.getName.contains("="))
-          .flatMap(c => leaves(c, depth - 1,
-            if (rel.isEmpty) c.getName else s"$rel/${c.getName}"))
-      leaves(staging, partitionCols.length, "").foreach { case (src, rel) =>
-        val dst = if (rel.isEmpty) target else new Path(target, rel)
-        if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
-        val aside = new Path(dst.getParent, s"$AsidePrefix$txnId-${dst.getName}")
-        val hadOld = fs.exists(dst)
-        if (hadOld && !fs.rename(dst, aside))
-          throw new java.io.IOException(s"aside rename failed: $dst -> $aside")
-        if (!fs.rename(src, dst)) {
-          // roll the partition back so the target stays complete even when
-          // the swap-in itself fails (recovery would do the same later)
-          if (hadOld && !fs.rename(aside, dst))
-            throw new java.io.IOException(
-              s"staging swap failed AND rollback failed: $src -> $dst")
-          throw new java.io.IOException(s"staging swap failed: $src -> $dst")
-        }
-        if (hadOld) fs.delete(aside, true)
-      }
-    } finally fs.delete(staging, true)
-  }
-
-  /** Keyed upsert (MERGE-by-key) into a partitioned parquet table:
-    * update rows replace target rows with the same key, new keys append —
-    * the reference's last-writer-wins merge semantics (validator.py:96-98)
-    * promoted to a table primitive.
-    *
-    * CONTRACT: a key's partition values must be STABLE (partition columns
-    * a function of the key). Only partitions present in the updates are
-    * read and rewritten, so an update that moves a key to a different
-    * partition would leave the old row in the untouched partition — the
-    * same caveat every partition-pruned MERGE has. Updates should be
-    * key-unique; duplicate update keys pick a deterministic winner
-    * (lexicographically smallest row), so replays converge.
-    *
-    * SCALE: cost is proportional to the TOUCHED partitions, never the
-    * table (broadcast semi-join on the partition values, staged write of
-    * only those partitions). DURABILITY: the merged partitions land in a
-    * staging dir first and are swapped in per-partition with the
-    * rename-aside protocol ([[overwriteViaStaging]]) — the pre-merge data
-    * is never destroyed before its replacement is durably in place, so a
-    * failure at any point leaves every partition complete (old or new) and
-    * re-running the same upsert converges. A crashed predecessor's
-    * interrupted swap is healed ([[recoverPartitionedTable]]) before the
-    * target is read. */
-  def upsertParquet(spark: SparkSession, path: String, updates: DataFrame,
-      keyCols: Seq[String], partitionCols: Seq[String]): Unit = {
-    recoverPartitionedTable(spark, path, partitionCols)
-    val target = spark.read.parquet(path)
-    val touched = updates.select(partitionCols.map(col): _*).distinct()
-    val affected = target.join(broadcast(touched), partitionCols, "left_semi")
-    val dataCols = target.columns.toSeq
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("__is_update").desc, struct(dataCols.map(col): _*).asc)
-    val merged = updates.withColumn("__is_update", lit(1))
-      .unionByName(affected.withColumn("__is_update", lit(0)))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__is_update", "__rn")
-    overwriteViaStaging(spark, path, partitionCols) { staged =>
-      merged.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*)
-        .parquet(staged)
-    }
-  }
-
-  /** Small-file compaction for a partitioned parquet table — the
-    * operational tail of incremental/streaming appends (every micro-batch
-    * lands >=1 file per partition; scans degrade with file count).
-    * Rewrites each selected partition's data into ~`maxRecordsPerFile`-row
-    * files: one shuffle on the partition columns, dynamic overwrite,
-    * content unchanged (spec-verified).
-    *
-    * SCALE: pass `partitionPredicate` (a predicate on the partition
-    * columns — e.g. `col("date") >= last_week`) from the scheduled job so
-    * only recently-appended partitions are read (partition-pruned scan)
-    * and rewritten; omitting it compacts the whole table. DURABILITY: the
-    * compacted partitions are staged and swapped in per-partition with the
-    * rename-aside protocol ([[overwriteViaStaging]]) — source files are
-    * never deleted before their compacted replacement is durably in
-    * place. */
-  def compactParquet(spark: SparkSession, path: String,
-      partitionCols: Seq[String], maxRecordsPerFile: Long = 5000000L,
-      partitionPredicate: Option[org.apache.spark.sql.Column] = None): Unit = {
-    recoverPartitionedTable(spark, path, partitionCols)
-    val compacted = spark.read.parquet(path)
-      .where(partitionPredicate.getOrElse(lit(true)))
-      .repartition(partitionCols.map(col): _*)
-    overwriteViaStaging(spark, path, partitionCols) { staged =>
-      compacted.write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy(partitionCols: _*)
-        .parquet(staged)
-    }
-  }
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

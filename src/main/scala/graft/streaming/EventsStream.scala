@@ -218,10 +218,13 @@ object EventsStream {
   /** Streaming keyed upsert publish (CDC shape): each micro-batch of
     * parsed titles MERGEs into a CURRENT-STATE table keyed by symbol and
     * partitioned by section — later deltas overwrite a symbol's row
-    * instead of appending history. Idempotent by construction (re-merging
-    * a replayed batch reproduces the same table, no batch_id bookkeeping
-    * needed), and the upsert rewrites only the sections the delta
-    * touches (TableWriters.upsertParquet). */
+    * instead of appending history. Committed through
+    * [[graft.sources.ManifestCommit]]: each micro-batch's merge rewrites
+    * only the sections the delta touches and publishes a new manifest
+    * version (single-file atomic claim), a crash mid-batch leaves only an
+    * unreferenced txn dir, and replaying a batch converges because the
+    * upsert is idempotent — no batch_id bookkeeping needed. Read the
+    * table back with [[graft.sources.ManifestCommit.readManifested]]. */
   def incrementalUpsertTitles(spark: SparkSession, landingDir: String,
       outDir: String, checkpointDir: String): Unit = {
     val target = s"$outDir/titles_current"
@@ -230,17 +233,7 @@ object EventsStream {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
           val delta = batch.withColumn("section", substring(col("symbol"), 1, 1))
-          // existence via the Hadoop FS API — java.io.File is always false
-          // on hdfs://...-style paths, which would silently route every
-          // batch to the initial-write branch and clobber prior sections
-          val p = new org.apache.hadoop.fs.Path(target)
-          val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-          if (exists)
-            graft.sources.TableWriters.upsertParquet(spark, target, delta,
-              Seq("symbol"), Seq("section"))
-          else
-            graft.sources.TableWriters.parquetPartitioned(delta, target, Seq("section"))
-          ()
+          upsertOrCreate(spark, target, delta, Seq("symbol"), "section")
         }
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -248,36 +241,20 @@ object EventsStream {
     q.awaitTermination()
   }
 
-  /** [[incrementalUpsertTitles]] committed through [[graft.sources
-    * .ManifestCommit]] instead of directory swaps — the variant for
-    * object stores without atomic rename: each micro-batch's merge
-    * publishes a new manifest version (single-file atomic claim), a
-    * crash mid-batch leaves only an unreferenced txn dir, and replaying
-    * a batch converges because the upsert is idempotent. Same CDC
-    * semantics, different commit substrate. */
-  def incrementalUpsertTitlesManifested(spark: SparkSession, landingDir: String,
-      outDir: String, checkpointDir: String): Unit = {
+  /** The manifest sink both keyed streaming writers share: the first
+    * batch creates the table (replaceAll commit), later ones upsert. */
+  private def upsertOrCreate(spark: SparkSession, target: String,
+      delta: DataFrame, keyCols: Seq[String], partitionCol: String): Unit = {
     import graft.sources.ManifestCommit
-    val target = s"$outDir/titles_current"
-    val q = incrementalTitles(spark, landingDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = batch.withColumn("section", substring(col("symbol"), 1, 1))
-          if (ManifestCommit.currentSnapshot(spark, target).isDefined)
-            ManifestCommit.upsertManifested(spark, target, delta,
-              Seq("symbol"), Seq("section"))
-          else
-            ManifestCommit.overwriteViaManifest(spark, target, Seq("section"),
-              replaceAll = true) { txn =>
-              delta.write.partitionBy("section").parquet(txn)
-            }
-          ()
-        }
+    if (ManifestCommit.currentSnapshot(spark, target).isDefined)
+      ManifestCommit.upsertManifested(spark, target, delta, keyCols,
+        Seq(partitionCol))
+    else
+      ManifestCommit.overwriteViaManifest(spark, target, Seq(partitionCol),
+        replaceAll = true) { txn =>
+        delta.write.partitionBy(partitionCol).parquet(txn)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    ()
   }
 
   /** Streaming exact dedup: drop events with a duplicate (user_id, props)
@@ -313,7 +290,7 @@ object EventsStream {
     * aggregation emits in append mode. Results land keyed by
     * (window, rank) in an idempotent in-memory table per test-harness
     * batch — a real deployment points the same function at a keyed
-    * upsert sink ([[incrementalUpsertTitlesManifested]] pattern).
+    * upsert sink ([[incrementalUpsertTitles]] pattern).
     *
     * SCALE: state is (window x term) counters bounded by the watermark
     * horizon; the top-k per batch is a WindowGroupLimit-prunable rank
@@ -348,13 +325,15 @@ object EventsStream {
   }
 
   /** [[trendingTerms]] with a PRODUCTION sink: each closed window's top-k
-    * is foreachBatch-MERGED into a keyed parquet table instead of
-    * accumulating in a driver buffer — the only shape that can run
-    * unattended (the driver-Seq form above is the spec/demo harness; its
-    * buffer grows with stream lifetime). Same CDC pattern as
-    * [[incrementalUpsertTitles]]: the upsert is keyed by (ws, rank) and
-    * partitioned by window date, so delivery is idempotent by
-    * construction — an at-least-once foreachBatch replay (crash between
+    * is foreachBatch-MERGED into a keyed, manifest-committed parquet table
+    * instead of accumulating in a driver buffer — the only shape that can
+    * run unattended (the driver-Seq form above is the spec/demo harness;
+    * its buffer grows with stream lifetime). Read the table back with
+    * [[graft.sources.ManifestCommit.readManifested]]: a raw parquet read
+    * of `target` would also see the superseded txn generations. Same CDC
+    * pattern as [[incrementalUpsertTitles]]: the upsert is keyed by
+    * (ws, rank) and partitioned by window date, so delivery is idempotent
+    * by construction — an at-least-once foreachBatch replay (crash between
     * sink write and checkpoint commit) or a full from-scratch replay
     * re-merges the same keys with the same values and CONVERGES, no
     * batch_id bookkeeping. Run with Trigger.AvailableNow as the scheduled
@@ -384,14 +363,7 @@ object EventsStream {
           val ranked = batch.withColumn("rank", row_number().over(w))
             .where(col("rank") <= k)
             .withColumn("ws_date", date_format(col("ws"), "yyyy-MM-dd"))
-          val p = new org.apache.hadoop.fs.Path(target)
-          val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-          if (exists)
-            graft.sources.TableWriters.upsertParquet(spark, target, ranked,
-              Seq("ws", "rank"), Seq("ws_date"))
-          else
-            graft.sources.TableWriters.parquetPartitioned(ranked, target, Seq("ws_date"))
-          ()
+          upsertOrCreate(spark, target, ranked, Seq("ws", "rank"), "ws_date")
         }
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -46,6 +46,16 @@ class ManifestCommitSpec extends GraftSpec {
       Seq((1L, "A2", 10), (9L, "z", 10)).toDF("k", "v", "p"), Seq("k"), Seq("p"))
     assert(contents(out) == Set((1L, "A2", 10), (2L, "b", 10), (9L, "z", 10),
       (3L, "c", 20), (4L, "d", 20)))
+    // duplicate keys within one update batch: deterministic winner (the
+    // smallest row), stable across replays
+    val dup = Seq((2L, "B9", 10), (2L, "B1", 10)).toDF("k", "v", "p")
+    ManifestCommit.upsertManifested(spark, out, dup, Seq("k"), Seq("p"))
+    assert(contents(out).filter(_._1 == 2L) == Set((2L, "B1", 10)))
+    ManifestCommit.upsertManifested(spark, out, dup, Seq("k"), Seq("p"))
+    assert(contents(out) == Set((1L, "A2", 10), (2L, "B1", 10), (9L, "z", 10),
+      (3L, "c", 20), (4L, "d", 20)))
+    assert(ManifestCommit.currentSnapshot(spark, out).get.entries("p=20") ==
+      txn20Before, "untouched partition not rewritten")
   }
 
   test("crash before publish leaves readers untouched; vacuum collects the orphan") {
@@ -306,6 +316,56 @@ class ManifestCommitSpec extends GraftSpec {
       Seq((9000L, 1, 1L)).toDF("k", "p", "v"), Seq("k"), Seq("p"))
     assert(ManifestCommit.minMaxManifested(spark, out, "k").isEmpty,
       "uncovered files must force the fallback, not a stale extremum")
+  }
+
+  test("metadata answers read only live files: an upsert's superseded files never count") {
+    import graft.expressions.PortableHash
+    val out = Files.createTempDirectory("mfc-live").toString + "/t"
+    // 180 rows, 3 partitions, several files each; v's max (1790) sits in p=2
+    val base = spark.range(0, 180).select(col("id"),
+      (col("id") % 3).cast("int").as("p"), (col("id") * 10).as("v"))
+    ManifestCommit.overwriteViaManifest(spark, out, Seq("p"), replaceAll = true,
+      statCols = Seq("v"), hllCols = Seq("v"), kmvCols = Seq("v"),
+      kmvK = 64) { txn =>
+      base.write.option("maxRecordsPerFile", 25).partitionBy("p").parquet(txn)
+    }
+    // replace the max-v row: p=2 moves to a new txn, and the first txn's
+    // p=2 files (still on disk, still in the version-1 sidecars) are
+    // superseded
+    ManifestCommit.upsertManifested(spark, out,
+      Seq((179L, 2, -5L)).toDF("id", "p", "v"), Seq("id"), Seq("p"),
+      statCols = Seq("v"), hllCols = Seq("v"), kmvCols = Seq("v"), kmvK = 64)
+    val snap = ManifestCommit.currentSnapshot(spark, out).get
+    assert(snap.entries.values.toSet.size == 2, "two live txn generations")
+
+    def maxJobId(): Int = spark.sparkContext.statusTracker
+      .getJobIdsForGroup(null).foldLeft(-1)(math.max)
+    val jobsBefore = maxJobId()
+    assert(ManifestCommit.countManifested(spark, out) == 180L)
+    assert(maxJobId() == jobsBefore, "covered count must run no job")
+    assert(ManifestCommit.minMaxManifested(spark, out, "v")
+      .contains((-5L, 1780L)), "the superseded max 1790 must not answer")
+
+    val table = ManifestCommit.readManifested(spark, out)
+    val directHll = table
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("v"), lit(12))))
+      .head.getLong(0)
+    assert(ManifestCommit.distinctManifested(spark, out, "v").contains(directHll))
+    val directKmv = table
+      .select(PortableHash.md5Hash60(col("v").cast("string")).as("h"))
+      .distinct().orderBy("h").limit(64).collect().map(_.getLong(0))
+    val (k, hs) = ManifestCommit.kmvSketchManifested(spark, out, "v").get
+    assert(k == 64 && hs.toSeq == directKmv.toSeq)
+    assert(ManifestCommit.distinctKmvManifested(spark, out, "v")
+      .contains(63.0 * 1152921504606846976.0 / directKmv.last))
+
+    val liveFileCount = snap.entries.toSeq.map { case (rel, txn) =>
+      new java.io.File(s"$out/data/$txn/$rel").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+    }.sum
+    val (_, scanned, total) = ManifestCommit.readManifestedPruned(
+      spark, out, "v", Long.MinValue, Long.MaxValue)
+    assert(total == liveFileCount && scanned == total)
   }
 
   test("no directory is ever renamed or deleted on the commit path") {

@@ -206,7 +206,7 @@ class PipelineOpsSpec extends GraftSpec {
       EventsStream.readEvents(spark, sf0001), "props", "1 hour", k = 3,
       target, s"$root/$ckpt")
     run("ckpt1")
-    def snapshot() = spark.read.parquet(target)
+    def snapshot() = graft.sources.ManifestCommit.readManifested(spark, target)
       .select("ws", "rank", "term", "n")
       .collect().map(r => (r.getTimestamp(0).getTime / 3600000L, r.getInt(1)) ->
         (r.getString(2), r.getLong(3))).toMap

@@ -61,35 +61,6 @@ class StreamingCpcSpec extends GraftSpec {
     assert(snap3.where(col("symbol") === "Y02E").count() == 1)
   }
 
-  test("streaming keyed upsert maintains a current-state table across deltas") {
-    val landing = Files.createTempDirectory("cpc-upsert-landing")
-    val out = Files.createTempDirectory("cpc-upsert-out").toString
-    val ckpt = Files.createTempDirectory("cpc-upsert-ckpt").toString
-    def publish(): Unit =
-      EventsStream.incrementalUpsertTitles(spark, landing.toString, out, ckpt)
-
-    Files.writeString(landing.resolve("d1.txt"),
-      "A01B1/00 0 Hand tools\nB01D1/00 0 Evaporating")
-    publish()
-    val t1 = spark.read.parquet(s"$out/titles_current")
-    assert(t1.count() == 2)
-
-    // delta 2: new title for an existing symbol + a brand-new symbol,
-    // touching only section A
-    Files.writeString(landing.resolve("d2.txt"),
-      "A01B1/00 0 Hand tools RENAMED\nA01B1/02 1 Spades")
-    publish()
-    val t2 = spark.read.parquet(s"$out/titles_current")
-    assert(t2.count() == 3)
-    assert(t2.where(col("symbol") === "A01B1/00")
-      .select("title").collect()(0).getString(0) == "Hand tools RENAMED")
-    assert(t2.where(col("symbol") === "B01D1/00").count() == 1)
-
-    // replay with no new files: checkpoint skips, table unchanged
-    publish()
-    assert(spark.read.parquet(s"$out/titles_current").count() == 3)
-  }
-
   test("streaming upsert through the manifest commit: same semantics, versioned state") {
     import graft.sources.ManifestCommit
     val landing = Files.createTempDirectory("cpc-mfc-landing")
@@ -97,7 +68,7 @@ class StreamingCpcSpec extends GraftSpec {
     val ckpt = Files.createTempDirectory("cpc-mfc-ckpt").toString
     val target = s"$out/titles_current"
     def publish(): Unit =
-      EventsStream.incrementalUpsertTitlesManifested(spark, landing.toString, out, ckpt)
+      EventsStream.incrementalUpsertTitles(spark, landing.toString, out, ckpt)
 
     Files.writeString(landing.resolve("d1.txt"),
       "A01B1/00 0 Hand tools\nB01D1/00 0 Evaporating")

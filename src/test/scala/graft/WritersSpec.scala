@@ -52,165 +52,6 @@ class WritersSpec extends GraftSpec {
     assert(plan.contains("ReadSchema: struct<n_nationkey:int,n_name:string>"), plan)
   }
 
-  test("keyed upsert rewrites only touched partitions, last-writer-wins") {
-    val out = Files.createTempDirectory("writers3").toString + "/t"
-    val base = Seq((1L, "a", 10), (2L, "b", 10), (3L, "c", 20), (4L, "d", 20))
-      .toDF("k", "v", "p")
-    TableWriters.parquetPartitioned(base, out, Seq("p"))
-    def filesIn(p: Int) = new java.io.File(s"$out/p=$p").listFiles()
-      .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val before20 = filesIn(20)
-    // update key 1 (existing), insert key 9 — both in partition 10 only
-    val updates = Seq((1L, "A2", 10), (9L, "z", 10)).toDF("k", "v", "p")
-    TableWriters.upsertParquet(spark, out, updates, Seq("k"), Seq("p"))
-    val back = spark.read.parquet(out)
-    assert(back.count() == 5)
-    assert(back.where(col("k") === 1).select("v").as[String].head() == "A2")
-    assert(back.where(col("k") === 9).count() == 1)
-    assert(back.where(col("p") === 20).count() == 2)
-    // untouched partition's files were not rewritten
-    assert(filesIn(20) == before20)
-
-    // duplicate keys within one update batch: deterministic winner
-    // (lexicographically smallest row), stable across replays
-    val dup = Seq((2L, "B9", 10), (2L, "B1", 10)).toDF("k", "v", "p")
-    TableWriters.upsertParquet(spark, out, dup, Seq("k"), Seq("p"))
-    val v1 = spark.read.parquet(out).where(col("k") === 2).select("v").as[String].head()
-    TableWriters.upsertParquet(spark, out, dup, Seq("k"), Seq("p"))
-    val v2 = spark.read.parquet(out).where(col("k") === 2).select("v").as[String].head()
-    assert(v1 == "B1" && v2 == "B1")
-    assert(spark.read.parquet(out).where(col("k") === 2).count() == 1)
-  }
-
-  test("stale staging leftovers are swept (age-gated) and never corrupt an upsert") {
-    val root = Files.createTempDirectory("writers5")
-    val out = root.toString + "/t"
-    val base = Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p")
-    TableWriters.parquetPartitioned(base, out, Seq("p"))
-    // a crashed predecessor's staging dir with garbage partition data,
-    // old enough to clear the sweep's age gate
-    val stale = new java.io.File(root.toFile, ".t.staging-deadbeef")
-    new java.io.File(stale, "p=10").mkdirs()
-    Files.write(stale.toPath.resolve("p=10/part-junk.parquet"), Array[Byte](1, 2))
-    stale.setLastModified(System.currentTimeMillis() - 2 * TableWriters.StagingSweepAgeMs)
-    // a FRESH staging dir (a concurrent writer's, if the single-writer
-    // contract were violated) must SURVIVE the sweep
-    val live = new java.io.File(root.toFile, ".t.staging-11112222-3333-4444-5555-666677778888")
-    live.mkdirs()
-    TableWriters.upsertParquet(spark, out,
-      Seq((1L, "a2", 10)).toDF("k", "v", "p"), Seq("k"), Seq("p"))
-    assert(!stale.exists(), "stale staging dir must be swept")
-    assert(live.exists(), "fresh staging dir must survive the age-gated sweep")
-    live.delete()
-    assert(root.toFile.listFiles().map(_.getName).toSet == Set("t"),
-      "no staging residue after a successful swap")
-    val back = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(back == Map(1L -> "a2", 2L -> "b"))
-  }
-
-  test("crash between aside-rename and swap-in: old partition restored, replay converges") {
-    val root = Files.createTempDirectory("writers6")
-    val out = root.toString + "/t"
-    val base = Seq((1L, "a", 10), (2L, "b", 10), (3L, "c", 20)).toDF("k", "v", "p")
-    TableWriters.parquetPartitioned(base, out, Seq("p"))
-    // manufacture the exact on-disk state of a writer killed between the
-    // aside rename and the swap-in of partition p=10: the old partition
-    // lives only under its aside name, the replacement only in staging
-    val txn = java.util.UUID.randomUUID().toString
-    val old10 = new java.io.File(s"$out/p=10")
-    val aside = new java.io.File(s"$out/.graft-old-$txn-p=10")
-    assert(old10.renameTo(aside))
-    val staging = s"$root/.t.staging-$txn"
-    Seq((1L, "A2", 10), (9L, "z", 10)).toDF("k", "v", "p")
-      .write.partitionBy("p").parquet(staging)
-    // the table still READS complete-old for every present partition, and
-    // recovery restores the absent one from its aside before any merge runs
-    TableWriters.upsertParquet(spark, out,
-      Seq((1L, "A2", 10), (9L, "z", 10)).toDF("k", "v", "p"), Seq("k"), Seq("p"))
-    val back = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(back == Map(1L -> "A2", 2L -> "b", 3L -> "c", 9L -> "z"),
-      s"pre-merge row k=2 must survive the crash+replay, got $back")
-    assert(!aside.exists(), "aside healed away")
-    // replaying the SAME upsert converges (idempotent)
-    TableWriters.upsertParquet(spark, out,
-      Seq((1L, "A2", 10), (9L, "z", 10)).toDF("k", "v", "p"), Seq("k"), Seq("p"))
-    val again = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(again == back)
-  }
-
-  test("crash after swap-in before aside delete: superseded aside cleaned, new data kept") {
-    val root = Files.createTempDirectory("writers7")
-    val out = root.toString + "/t"
-    val base = Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p")
-    TableWriters.parquetPartitioned(base, out, Seq("p"))
-    TableWriters.upsertParquet(spark, out,
-      Seq((1L, "a2", 10)).toDF("k", "v", "p"), Seq("k"), Seq("p"))
-    // manufacture a crash AFTER p=10's swap-in: the superseded old copy
-    // still sits under its aside name next to the committed new partition
-    val txn = java.util.UUID.randomUUID().toString
-    val aside = new java.io.File(s"$out/.graft-old-$txn-p=10")
-    new java.io.File(aside, "x").mkdirs()
-    Files.write(aside.toPath.resolve("x/part-old.parquet"), Array[Byte](9))
-    TableWriters.recoverPartitionedTable(spark, out, Seq("p"))
-    assert(!aside.exists(), "superseded aside must be deleted, not restored")
-    val back = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(back == Map(1L -> "a2", 2L -> "b"))
-  }
-
-  test("recovery does not touch sibling tables' asides") {
-    val root = Files.createTempDirectory("writers8")
-    val out = root.toString + "/t"
-    val base = Seq((1L, "a", 10)).toDF("k", "v", "p")
-    TableWriters.parquetPartitioned(base, out, Seq("p"))
-    // a sibling table's root-level aside in the same parent dir
-    val txn = java.util.UUID.randomUUID().toString
-    val other = new java.io.File(root.toFile, s".graft-old-$txn-other_table")
-    other.mkdirs()
-    TableWriters.recoverPartitionedTable(spark, out, Seq("p"))
-    assert(other.exists(), "another table's aside is not ours to heal")
-  }
-
-  test("compaction shrinks file count, preserves content and partitioning") {
-    val out = Files.createTempDirectory("writers4").toString + "/t"
-    val orders = spark.read.parquet(s"$sf0001/orders.parquet")
-      .withColumn("y", year(col("o_orderdate")))
-    // simulate many small incremental appends
-    (1 to 5).foreach { _ =>
-      orders.repartition(8).write.mode("append").partitionBy("y").parquet(out)
-    }
-    def nFiles = new java.io.File(out).listFiles().filter(_.getName.startsWith("y="))
-      .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
-    val before = nFiles
-    val wantCnt = spark.read.parquet(out).count()
-    val wantSum = spark.read.parquet(out).agg(sum("o_orderkey")).as[Long].head()
-    TableWriters.compactParquet(spark, out, Seq("y"))
-    assert(nFiles < before, s"$nFiles vs $before")
-    assert(spark.read.parquet(out).count() == wantCnt)
-    assert(spark.read.parquet(out).agg(sum("o_orderkey")).as[Long].head() == wantSum)
-    val scan = spark.read.parquet(out).where(col("y") === 1997)
-      .queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters"), scan)
-
-    // predicate-scoped compaction: untouched partitions keep their files
-    (1 to 3).foreach { _ =>
-      orders.where(col("y") === 1996).repartition(6)
-        .write.mode("append").partitionBy("y").parquet(out)
-    }
-    def filesIn(y: Int) = new java.io.File(s"$out/y=$y").listFiles()
-      .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val f1997 = filesIn(1997)
-    val n1996 = filesIn(1996).size
-    TableWriters.compactParquet(spark, out, Seq("y"),
-      partitionPredicate = Some(col("y") === 1996))
-    assert(filesIn(1996).size < n1996)
-    assert(filesIn(1997) == f1997)
-    assert(spark.read.parquet(out).count() == wantCnt + 3 * orders.where(col("y") === 1996).count())
-  }
-
   test("typed top-k aggregator matches the window-function answer") {
     val ev = graft.queries.Tables.events(spark, sf0001)
     val byAgg = ev.select(col("user_id"), col("value"), col("event_id"))
